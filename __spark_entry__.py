@@ -365,7 +365,7 @@ def _q_extract_pdf_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows = {"url": [], "title": [], "extracted_text": [],
                     "n_sections": []}
             for url, blob in zip(pdf["url"], pdf["html"]):
-                title, text, n = extract_pdf_text(bytes(blob), "chain")
+                title, text, n, _ = extract_pdf_text(bytes(blob), "chain")
                 rows["url"].append(url)
                 rows["title"].append(title)
                 rows["extracted_text"].append(text)

@@ -1270,26 +1270,27 @@ class _TreeBuilder(HTMLParser):
         if self._stopped:
             return len(self.rawdata)
         rawdata = self.rawdata
-        nul = rawdata.find("\x00", i)
+        # the NUL scan stops at the tag's '>': unbounded, it would walk
+        # to the end of the input once per tag
+        gt = rawdata.find(">", i)
+        nul = rawdata.find("\x00", i, len(rawdata) if gt == -1 else gt)
         if nul != -1:
-            gt = rawdata.find(">", i)
-            if gt == -1 or nul < gt:
-                # NUL inside the start tag (markup = end of input,
-                # libxml2): the scanned prefix still takes effect —
-                # '<p\x00 class="x">t' keeps an attributeless <p>,
-                # '<scr\x00ipt>' keeps an empty <scr> — then parsing
-                # stops (stdlib would reject the tag and re-emit it
-                # as text instead)
-                prefix = _inv_markup_prefix(rawdata[i:nul])
-                m = _STARTNAME_NUL_RE.match(prefix)
-                if m is not None:
-                    tag = _libxml_tag_name(m.group(1))
-                    if tag is not None:
-                        ad, selfclose = _parse_attrs_libxml(
-                            prefix + ">", self._hide_refs)
-                        self._insert(tag, ad, selfclose)
-                self._stopped = True
-                return len(rawdata)
+            # NUL inside the start tag (markup = end of input,
+            # libxml2): the scanned prefix still takes effect —
+            # '<p\x00 class="x">t' keeps an attributeless <p>,
+            # '<scr\x00ipt>' keeps an empty <scr> — then parsing
+            # stops (stdlib would reject the tag and re-emit it
+            # as text instead)
+            prefix = _inv_markup_prefix(rawdata[i:nul])
+            m = _STARTNAME_NUL_RE.match(prefix)
+            if m is not None:
+                tag = _libxml_tag_name(m.group(1))
+                if tag is not None:
+                    ad, selfclose = _parse_attrs_libxml(
+                        prefix + ">", self._hide_refs)
+                    self._insert(tag, ad, selfclose)
+            self._stopped = True
+            return len(rawdata)
         return super().parse_starttag(i)
 
     def parse_endtag(self, i):
@@ -1324,9 +1325,7 @@ class _TreeBuilder(HTMLParser):
             if m:
                 self.handle_endtag(m.group(1))
             return span_end + 1 if gt0 != -1 else len(rawdata)
-        nul = rawdata.find("\x00", i)
-        gt = rawdata.find(">", i)
-        if nul != -1 and (gt == -1 or nul < gt):
+        if rawdata.find("\x00", i, span_end) != -1:
             # NUL inside the end tag (markup = end of input): the
             # scanned name prefix still closes its element, then
             # parsing stops ('</p\x00>u' closes the p, drops u)

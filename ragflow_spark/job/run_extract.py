@@ -12,10 +12,11 @@ Usage (cluster):
 Execution shape per wave (SURVEY.md §4.2):
 
     Scan(pages) --filter bucket IN wave--> [salted Repartition]
-      -> MapInPandas(extract) -> write extracted/ (partitioned by bucket,
-                                 dynamic partition overwrite = idempotent)
-      -> MapInPandas(chunk)   -> write chunks/   (same)
-      -> read-back agg        -> append lineage rows (commit point)
+      -> MapInPandas(extract) -> persist    (one parse per document)
+           -> drop sections    -> write extracted/ (partitioned by bucket,
+                                  dynamic partition overwrite = idempotent)
+           -> MapInPandas(chunk) -> write chunks/   (same)
+      -> unpersist, read-back agg -> append lineage rows (commit point)
 
 Resume: completed (digest, bucket) pairs are loaded from the lineage
 table and filtered out of the scan — no recompute, byte-identical final
@@ -30,8 +31,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ragflow_spark.job import checkpoint as ck
-from ragflow_spark.job.extract import chunk_pages, extract_pages
+from ragflow_spark.job import checkpoint as ck, extract as ex
 from ragflow_spark.job.salting import salted_repartition
 
 
@@ -60,6 +60,7 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
     ``fail_after_wave`` injects a crash after the k-th wave commits
     (test hook for the resume guarantee).
     """
+    ex.check_template(template)
     run_id = run_id or f"run-{int(time.time() * 1000):x}"
     # one job-level index timestamp (injectable): a per-wave wall
     # clock would re-stamp replayed buckets on resume, leaving one
@@ -95,14 +96,16 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
         if repartition:
             sub = salted_repartition(sub, num_partitions=repartition,
                                      salt_buckets=salt_buckets)
-        # bucket is re-derived from url on the output side (cheaper than
-        # threading a passthrough column through the Arrow UDF)
-        extracted = extract_pages(sub).withColumn(
-            "bucket", ck.bucket_col("url", n_buckets))
-        _write_partitioned(extracted, extracted_path)
-        chunks = chunk_pages(sub, template).withColumn(
-            "bucket", ck.bucket_col("url", n_buckets))
-        _write_partitioned(chunks, chunks_path)
+        # one parse per document feeds both outputs; bucket is re-derived
+        # from url on the output side (cheaper than threading a
+        # passthrough column through the Arrow UDF)
+        bucket = ck.bucket_col("url", n_buckets)
+        parsed = ex.parse_pages(sub).persist()
+        _write_partitioned(parsed.drop(*ex.SECTION_COLUMNS)
+                           .withColumn("bucket", bucket), extracted_path)
+        _write_partitioned(ex.chunk_parsed(parsed, template)
+                           .withColumn("bucket", bucket), chunks_path)
+        parsed.unpersist()
         if index:
             # search-store rows (build_chunks field assembly,
             # rag/svr/task_executor.py:256-293) from the committed
@@ -162,7 +165,7 @@ def main() -> None:
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--template", default="naive",
-                    choices=["naive", "book", "one", "paper", "laws"])
+                    choices=ex.TEMPLATES)
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--waves", type=int, default=8)
     ap.add_argument("--salt-buckets", type=int, default=8)

@@ -353,7 +353,8 @@ def test_sniff_office_legacy_kinds():
 def test_office_batches_doc_ppt_rows():
     import pandas as pd
 
-    from ragflow_spark.job.extract import _office_batches
+    from ragflow_spark.job.extract import (OFFICE_SCHEMA, _map_documents,
+                                           _office_rows)
 
     doc = build_doc(["Doc Title", "first line", "second line"])
     ppt = build_ppt([["Slide A", "body"], ["Slide B", "more"]])
@@ -362,7 +363,8 @@ def test_office_batches_doc_ppt_rows():
         "url": ["u1", "u2", "u3"],
         "html": [doc, ppt, hostile],
     })
-    out = pd.concat(list(_office_batches(iter([pdf]))))
+    out = pd.concat(list(_map_documents(iter([pdf]), _office_rows,
+                                        OFFICE_SCHEMA)))
     got = [(r.url, r.seq, r.kind, r.text) for r in out.itertuples()]
     assert got == [
         ("u1", 0, "para", "Doc Title"),

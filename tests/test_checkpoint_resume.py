@@ -137,3 +137,25 @@ def test_index_stage_rows(spark, pages_path, tmp_path):
         assert r["id"] == xxh64_hexdigest(
             (text + r["doc_id"]).encode("utf-8"))
         assert r["kb_id"] == "kb9" and r["img_id"] == ""
+
+
+def test_unknown_template_rejected_before_any_job(spark, pages_path,
+                                                  tmp_path):
+    from ragflow_spark.job.extract import chunk_pages
+    from ragflow_spark.job.run_extract import run_job
+
+    out = tmp_path / "out"
+    pages = spark.read.parquet(pages_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("bogus-template", "must stay empty")
+    try:
+        with pytest.raises(ValueError, match="bogus"):
+            run_job(spark, pages_path, str(out), template="bogus",
+                    n_buckets=N_BUCKETS, waves=WAVES)
+        with pytest.raises(ValueError, match="bogus"):
+            chunk_pages(pages, "bogus")
+        assert sc.statusTracker().getJobIdsForGroup("bogus-template") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # no extracted/, chunks/ or lineage row
+    assert not out.exists()

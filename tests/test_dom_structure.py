@@ -383,6 +383,28 @@ def test_adversarial_html_shapes_bounded():
         assert out.startswith("[no-title]\n")
 
 
+def test_many_small_tags_parse_linear():
+    """Per-tag work must not depend on the input length: a tag scan that
+    walks to the end of the input once per tag makes the parse
+    O(tags x bytes). Best of 3, the µs/byte of a ~2 MB page of small
+    <p> elements stays under 1.5x that of a ~256 KB one."""
+    import time
+
+    def us_per_byte(n_bytes: int) -> float:
+        para = "<p>small para text</p>\n"
+        doc = ("<html><body>" + para * (n_bytes // len(para))
+               + "</body></html>")
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.perf_counter()
+            parse_html(doc)
+            best = min(best, time.perf_counter() - t0)
+        return best * 1e6 / len(doc)
+
+    small = us_per_byte(256 * 1024)
+    assert us_per_byte(2 * 1024 * 1024) < 1.5 * small
+
+
 # ---------------------------------------------------------------------
 # DOCTYPE machinery (probed live): a doctype ANYWHERE suppresses the
 # after-</html> reopen (content after the closed root is dropped), and

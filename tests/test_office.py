@@ -676,12 +676,13 @@ def test_office_batch_corrupt_legacy_payloads_degrade():
     # document — one bad crawl payload cannot kill the whole batch
     import pandas as pd
     from ragflow_spark.extractlib.cfb import build_cfb
-    from ragflow_spark.job.extract import _office_batches
+    from ragflow_spark.job.extract import (OFFICE_SCHEMA, _map_documents,
+                                           _office_rows)
     bad_doc = build_cfb([("WordDocument", b"\x00" * 600)])
     bad_ppt = build_cfb([("PowerPoint Document",
                           b"\x0f\x00\x00\x00\xff\xff\xff\x7f")])
     pdf = pd.DataFrame({"url": ["a", "b"], "html": [bad_doc, bad_ppt]})
-    out = list(_office_batches(iter([pdf])))
+    out = list(_map_documents(iter([pdf]), _office_rows, OFFICE_SCHEMA))
     assert len(out) == 1 and len(out[0]) == 0
 
 
@@ -726,8 +727,11 @@ def test_docx_table_empty_cell_skipped_in_row_render():
 
 def test_pdf_table_batch_skips_non_pdf_payloads():
     import pandas as pd
-    from ragflow_spark.job.extract import _table_batches_factory
-    gen = _table_batches_factory(False)
+    from functools import partial
+
+    from ragflow_spark.job.extract import (TABLES_SCHEMA, _map_documents,
+                                           _table_rows)
     pdf = pd.DataFrame({"url": ["a"], "html": [b"<html>not pdf</html>"]})
-    out = list(gen(iter([pdf])))
+    out = list(_map_documents(iter([pdf]), partial(_table_rows, False),
+                              TABLES_SCHEMA))
     assert len(out) == 1 and len(out[0]) == 0

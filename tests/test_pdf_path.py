@@ -10,9 +10,9 @@ from ragflow_spark.extractlib.pdfrules import (filter_forpages, line_tag,
                                                parse_positions, pdf_to_sections,
                                                remove_tag, sort_y_firstly)
 from ragflow_spark.extractlib.templates import (chunk_naive_pdf,
-                                                chunk_one_pdf,
                                                 chunk_paper_pdf,
-                                                extract_pdf_text)
+                                                extract_pdf_text, one,
+                                                pdf_text)
 
 VOCAB = ("key agg row scan slow fast table value part hash merge batch "
          "spark line sort window the a").split()
@@ -38,7 +38,7 @@ def test_pdf_boxes_have_geometry():
 def test_multi_page_byte_identity():
     blob, title, paras = _doc(n_paras=25, words=60)
     assert total_page_number(blob) > 1
-    t, text, n = extract_pdf_text(blob)
+    t, text, n = pdf_text(pdf_to_sections(blob))
     expected = title + "\n" + "\n".join(
         f"{i + 1} Part {i + 1}\n{p}" for i, p in enumerate(paras))
     assert t == title
@@ -57,7 +57,8 @@ def test_naive_and_one_pdf_cover_all_text():
     blob, title, paras = _doc()
     sections = [title] + [x for i, p in enumerate(paras)
                           for x in (f"{i + 1} Part {i + 1}", p)]
-    assert chunk_one_pdf(blob) == ["\n".join(sections)]
+    assert one([remove_tag(t) for t, _ in pdf_to_sections(blob)]) == [
+        "\n".join(sections)]
     assert "".join(chunk_naive_pdf(blob)) == "".join(sections)
 
 
@@ -121,7 +122,7 @@ def test_hostile_pdf_inputs_never_raise():
 @pytest.mark.parametrize("n_paras,words", [(1, 3), (2, 8), (12, 80)])
 def test_byte_identity_across_shapes(n_paras, words):
     blob, title, paras = _doc(n_paras=n_paras, words=words)
-    _, text, _ = extract_pdf_text(blob)
+    _, text, _ = pdf_text(pdf_to_sections(blob))
     assert text == title + "\n" + "\n".join(
         f"{i + 1} Part {i + 1}\n{p}" for i, p in enumerate(paras))
 
@@ -280,12 +281,12 @@ def test_detect_two_column_rejects_single_column():
 def test_chunk_laws_pdf_hierarchical_chains():
     # laws PDF branch: rule-chain sections through bullets_category +
     # hierarchical_merge — each Article chunk carries its Chapter chain
-    from ragflow_spark.extractlib.templates import chunk_laws_pdf
+    from ragflow_spark.extractlib.templates import laws_pdf
 
     secs = [("Chapter I", "preamble words about scope and purpose here"),
             ("Article 1", "the first article body text sits here"),
             ("Article 2", "the second article body text and more")]
-    out = chunk_laws_pdf(build_pdf("Law 1", secs))
+    out = laws_pdf(pdf_to_sections(build_pdf("Law 1", secs)))
     assert out[0] == "Law 1"
     assert out[2].startswith("Chapter I\nArticle 1\n")
     assert out[3].startswith("Chapter I\nArticle 2\n")

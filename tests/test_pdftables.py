@@ -9,14 +9,15 @@ from ragflow_spark.extractlib.pdfgen import (
     build_pdf_table,
 )
 from ragflow_spark.extractlib.pdfplain import parse_pdf_boxes
-from ragflow_spark.extractlib.pdfrules import text_merge, detect_two_column
+from ragflow_spark.extractlib.pdfrules import (detect_two_column,
+                                               pdf_to_sections, text_merge)
 from ragflow_spark.extractlib.pdftables import (
     extract_table_figure,
     has_table_caption,
     pdf_to_sections_tables,
     tag_layouts_with_tables,
 )
-from ragflow_spark.extractlib.templates import extract_pdf_text
+from ragflow_spark.extractlib.templates import pdf_text
 
 SECS = [
     ("1 Part 1", "alpha beta gamma delta epsilon zeta eta theta "
@@ -35,8 +36,9 @@ def _table_blob(split=False):
 
 
 def test_text_merge_stitches_fragments_byte_identical():
-    plain = extract_pdf_text(build_pdf("Paper 7", SECS))
-    frag = extract_pdf_text(build_pdf("Paper 7", SECS, fragment=True))
+    plain = pdf_text(pdf_to_sections(build_pdf("Paper 7", SECS)))
+    frag = pdf_text(pdf_to_sections(
+        build_pdf("Paper 7", SECS, fragment=True)))
     assert frag == plain
 
 
@@ -51,8 +53,9 @@ def test_text_merge_skips_table_regions():
 
 
 def test_hidden_text_dropped_byte_identical():
-    plain = extract_pdf_text(build_pdf("Paper 7", SECS))
-    hidden = extract_pdf_text(build_pdf("Paper 7", SECS, hidden=True))
+    plain = pdf_text(pdf_to_sections(build_pdf("Paper 7", SECS)))
+    hidden = pdf_text(pdf_to_sections(
+        build_pdf("Paper 7", SECS, hidden=True)))
     assert hidden == plain
     # the hidden line really is in the bytes
     assert b"hidden" in build_pdf("Paper 7", SECS, hidden=True)
@@ -121,8 +124,8 @@ def test_table_html_rendering():
 
 
 def test_body_text_unchanged_by_table_popout():
-    plain = extract_pdf_text(build_pdf("Paper 7", SECS))
-    with_table = extract_pdf_text(_table_blob())
+    plain = pdf_text(pdf_to_sections(build_pdf("Paper 7", SECS)))
+    with_table = pdf_text(pdf_to_sections(_table_blob()))
     assert with_table == plain
 
 
@@ -139,8 +142,9 @@ def test_source_note_lines_dropped():
 
 
 def test_header_footer_dropped_byte_identical():
-    plain = extract_pdf_text(build_pdf("Paper 7", SECS))
-    hf = extract_pdf_text(build_pdf("Paper 7", SECS, header_footer=True))
+    plain = pdf_text(pdf_to_sections(build_pdf("Paper 7", SECS)))
+    hf = pdf_text(pdf_to_sections(
+        build_pdf("Paper 7", SECS, header_footer=True)))
     assert hf == plain
     assert b"preprint" in build_pdf("Paper 7", SECS, header_footer=True)
 
@@ -187,9 +191,9 @@ def test_layout_keep_rules_keep_feats():
 
 
 def test_char_merge_byte_identical():
-    plain = extract_pdf_text(build_pdf("Paper 7", SECS))
-    chars = extract_pdf_text(build_pdf("Paper 7", SECS,
-                                       char_level=True))
+    plain = pdf_text(pdf_to_sections(build_pdf("Paper 7", SECS)))
+    chars = pdf_text(pdf_to_sections(
+        build_pdf("Paper 7", SECS, char_level=True)))
     assert chars == plain
 
 

@@ -93,6 +93,14 @@ def test_book_template_modes(spark, pages):
     assert modes.get("naive", 0) > 0
 
 
+def test_paper_template_html_only_pages_yield_no_chunks(pages):
+    # paper chunks PDFs only: a batch of HTML pages yields an empty
+    # frame, which must still convert to the chunk schema
+    from ragflow_spark.job.extract import chunk_pages
+
+    assert chunk_pages(pages, "paper").count() == 0
+
+
 def test_host_skew_present(pages):
     hosts = (
         pages.groupBy(F.regexp_extract("url", r"https://([^/]+)/", 1)

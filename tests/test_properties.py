@@ -8,13 +8,12 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ragflow_spark.extractlib.codec import decode_blob, find_codec
-from ragflow_spark.extractlib.htmlparse import extract_html
+from ragflow_spark.extractlib.htmlparse import extract_html, html_sections
 from ragflow_spark.extractlib.jsonparse import split_json
 from ragflow_spark.extractlib.merge import naive_merge
-from ragflow_spark.extractlib.templates import (chunk_book_html,
-                                                chunk_laws_html,
+from ragflow_spark.extractlib.templates import (book_html,
                                                 chunk_naive_html,
-                                                chunk_one_html)
+                                                laws_html, one)
 from ragflow_spark.extractlib.tokens import num_tokens_from_string
 from ragflow_spark.extractlib.txtparse import parser_txt
 from ragflow_spark.extractlib.xxh64 import xxh64_hexdigest
@@ -48,9 +47,10 @@ def test_codec_and_extract_never_raise(blob):
     assert isinstance(codec, str)
     decode_blob(blob)
     extract_html(blob)
-    for fn in (chunk_naive_html, chunk_one_html, chunk_laws_html):
-        fn(blob)
-    chunk_book_html(blob)
+    chunk_naive_html(blob)
+    sections = html_sections(blob)
+    for fn in (one, laws_html, book_html):
+        fn(sections)
 
 
 @settings(max_examples=50, deadline=None)

@@ -42,9 +42,10 @@ def _blob(name: str) -> bytes:
 
 
 def test_html_fixture_extract_and_chunkers():
-    from ragflow_spark.extractlib.htmlparse import extract_html
-    from ragflow_spark.extractlib.templates import (
-        chunk_book_html, chunk_naive_html, chunk_one_html)
+    from ragflow_spark.extractlib.htmlparse import (extract_html,
+                                                    html_sections)
+    from ragflow_spark.extractlib.templates import (book_html,
+                                                    chunk_naive_html, one)
 
     blob = _blob("test.html")
     g = GOLD["test.html"]
@@ -52,8 +53,8 @@ def test_html_fixture_extract_and_chunkers():
     assert text.startswith(g["preview"])
     assert _h(text) == g["extract_html"]
     assert _h(chunk_naive_html(blob)) == g["chunk_naive"]
-    assert _h(chunk_one_html(blob)) == g["chunk_one"]
-    assert _h(list(chunk_book_html(blob)[0])) == g["chunk_book"]
+    assert _h(one(html_sections(blob))) == g["chunk_one"]
+    assert _h(list(book_html(html_sections(blob))[0])) == g["chunk_book"]
 
 
 @pytest.mark.parametrize("name", ["test.txt", "ragflow.txt",
@@ -109,11 +110,11 @@ def test_xlsx_fixture():
 def test_pdf_fixture_real_world_streams():
     """Flate streams, indirect /Length, ToUnicode CMaps, hex TJ arrays,
     q/Q + rg color state — the full real-world content-stream path."""
-    from ragflow_spark.extractlib.templates import (chunk_naive_pdf,
-                                                    extract_pdf_text)
+    from ragflow_spark.extractlib.pdfrules import pdf_to_sections
+    from ragflow_spark.extractlib.templates import chunk_naive_pdf, pdf_text
 
     blob = _blob("test.pdf")
-    title, text, n = extract_pdf_text(blob)
+    title, text, n = pdf_text(pdf_to_sections(blob))
     assert title == GOLD["test.pdf"]["title"]
     assert n == GOLD["test.pdf"]["n_sections"]
     assert _h(text) == GOLD["test.pdf"]["extract_pdf"]

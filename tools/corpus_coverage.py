@@ -51,14 +51,29 @@ def collect_frames(sf_dir: str):
 
 
 def sweep(frames) -> None:
+    from functools import partial
+
     from ragflow_spark.job import extract as X
 
+    def pages_pass(doc_fn, schema):
+        return lambda it: X._map_documents(it, doc_fn, schema)
+
+    def chunk_pass(tpl):
+        # the chunk pass reads the extract pass's rows, as in run_job
+        schema = X.BOOK_CHUNKS_SCHEMA if tpl == "book" else X.CHUNKS_SCHEMA
+        cols = ["url", "parser", "extracted_text", *X.SECTION_COLUMNS]
+        return lambda it: X._map_documents(
+            (p[cols] for p in X._extract_batches(it)),
+            partial(X._chunk_document, tpl), schema)
+
     batch_fns = [("extract", X._extract_batches),
-                 ("office", X._office_batches),
-                 ("tables", X._table_batches_factory(False)),
-                 ("tables_html", X._table_batches_factory(True))]
-    for tpl in ("naive", "paper", "book", "one", "laws"):
-        batch_fns.append((f"chunk_{tpl}", X._chunk_batches_factory(tpl)))
+                 ("office", pages_pass(X._office_rows, X.OFFICE_SCHEMA)),
+                 ("tables", pages_pass(partial(X._table_rows, False),
+                                       X.TABLES_SCHEMA)),
+                 ("tables_html", pages_pass(partial(X._table_rows, True),
+                                            X.TABLES_SCHEMA))]
+    for tpl in X.TEMPLATES:
+        batch_fns.append((f"chunk_{tpl}", chunk_pass(tpl)))
 
     sys.settrace(_global_trace)
     try:

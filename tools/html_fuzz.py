@@ -252,7 +252,7 @@ def gen_deep(rng: random.Random) -> str:
     return "".join(parts)
 
 
-def _check(doc: str, frag: bool) -> tuple:
+def _check(doc: str) -> tuple:
     # full-root comparison for every kind: shelled documents can carry
     # structural junk that restructures above (or duplicates) <body>,
     # so a body-subtree compare would miss divergences there
@@ -276,8 +276,7 @@ def run(n: int, seed: int, verbose: bool = True,
             doc = gen_fragment(rng)
         else:
             doc = gen_doc(rng)
-        # deep docs restructure above <body>: compare the full root
-        lx, ours = _check(doc, frag or deep)
+        lx, ours = _check(doc)
         if lx != ours:
             fails += 1
             if verbose and fails <= 10:
