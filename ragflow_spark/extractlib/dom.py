@@ -1248,7 +1248,10 @@ class _TreeBuilder(HTMLParser):
         # accepts only '-->' and re-emits an unterminated comment as
         # literal text at close().  The comment content is dropped
         # either way (cleaner semantics, handle_comment below); input
-        # is single-feed, so rawdata holds the whole document.
+        # is single-feed, so rawdata holds the whole document.  stdlib
+        # goahead dispatches '<!--' here directly, so a comment must
+        # disarm the misplaced-doctype quirk itself.
+        self._decl_quirk = False
         m = _COMMENT_CLOSE_RE.search(self.rawdata, i + 4)
         return m.end() if m else len(self.rawdata)
 

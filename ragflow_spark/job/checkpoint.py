@@ -33,9 +33,10 @@ re-extracts one wave into the same deterministic partition paths
 from __future__ import annotations
 
 import json
-import time
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import StructType
 
 from ragflow_spark.extractlib.xxh64 import xxh64_hexdigest
 
@@ -85,27 +86,34 @@ def load_done_buckets(spark: SparkSession, ckpt_path: str,
 
 def append_lineage(spark: SparkSession, ckpt_path: str,
                    rows: list[dict]) -> None:
-    """Append completed-bucket lineage rows (the commit point of a wave)."""
-    now = time.time()
-    for r in rows:
-        r.setdefault("ts", now)
+    """Append completed-bucket lineage rows (the commit point of a wave).
+
+    The rows cross to the JVM as one Arrow batch of a pandas frame,
+    typed by ``LINEAGE_SCHEMA``; ``ts`` is the commit's
+    ``current_timestamp()``."""
+    schema = StructType([f for f in StructType.fromDDL(LINEAGE_SCHEMA)
+                         if f.name != "ts"])
     df = spark.createDataFrame(
-        [(r["run_id"], r["digest"], r["bucket"], r["n_docs"],
-          r["n_chunks"], r["n_bytes"], r["wall_ms"], r["wave"],
-          r["status"], None) for r in rows],
-        schema=LINEAGE_SCHEMA,
+        pd.DataFrame(rows, columns=schema.names), schema=schema,
     ).withColumn("ts", F.current_timestamp())
     df.coalesce(1).write.mode("append").parquet(ckpt_path)
 
 
 def lineage_summary(spark: SparkSession, ckpt_path: str) -> DataFrame:
-    """Per-digest rollup of the lineage table (ops metrics)."""
+    """Per-digest rollup of the lineage table (ops metrics).
+
+    ``wall_ms`` is a wave's wall time, stamped on each of its bucket
+    rows, so it is summed once per (run_id, wave)."""
     lineage = spark.read.parquet(ckpt_path)
+    wave = Window.partitionBy("digest", "status", "run_id", "wave")
+    first_of_wave = F.row_number().over(wave.orderBy("bucket")) == 1
     return (
-        lineage.groupBy("digest", "status")
+        lineage.withColumn("wave_ms",
+                           F.when(first_of_wave, F.col("wall_ms")))
+        .groupBy("digest", "status")
         .agg(F.countDistinct("bucket").alias("n_buckets"),
              F.sum("n_docs").alias("n_docs"),
              F.sum("n_chunks").alias("n_chunks"),
              F.sum("n_bytes").alias("n_bytes"),
-             F.sum("wall_ms").alias("wall_ms"))
+             F.sum("wave_ms").alias("wall_ms"))
     )

@@ -15,8 +15,9 @@ Execution shape per wave (SURVEY.md §4.2):
       -> MapInPandas(extract) -> persist    (one parse per document)
            -> drop sections    -> write extracted/ (partitioned by bucket,
                                   dynamic partition overwrite = idempotent)
-           -> MapInPandas(chunk) -> write chunks/   (same)
-      -> unpersist, read-back agg -> append lineage rows (commit point)
+           -> MapInPandas(chunk) -> persist -> write chunks/   (same)
+      -> per-bucket agg over both persisted frames (the rows just written)
+      -> unpersist -> append lineage rows (commit point)
 
 Resume: completed (digest, bucket) pairs are loaded from the lineage
 table and filtered out of the scan — no recompute, byte-identical final
@@ -28,6 +29,8 @@ from __future__ import annotations
 import argparse
 import json
 import time
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -45,6 +48,17 @@ def _write_partitioned(df: DataFrame, path: str) -> None:
        .option("partitionOverwriteMode", "dynamic")
        .partitionBy("bucket")
        .parquet(path))
+
+
+@contextmanager
+def _persisted(df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` persisted for the block, unpersisted however it exits (a
+    failed wave must not leak cached blocks)."""
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def run_job(spark: SparkSession, input_path: str, output_dir: str,
@@ -100,45 +114,42 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
         # from url on the output side (cheaper than threading a
         # passthrough column through the Arrow UDF)
         bucket = ck.bucket_col("url", n_buckets)
-        parsed = ex.parse_pages(sub).persist()
-        _write_partitioned(parsed.drop(*ex.SECTION_COLUMNS)
-                           .withColumn("bucket", bucket), extracted_path)
-        _write_partitioned(ex.chunk_parsed(parsed, template)
-                           .withColumn("bucket", bucket), chunks_path)
-        parsed.unpersist()
-        if index:
-            # search-store rows (build_chunks field assembly,
-            # rag/svr/task_executor.py:256-293) from the committed
-            # chunk files; embedding is a model seam the cluster job
-            # adds via indexing.embed_chunks(encode=<pandas UDF>)
-            from ragflow_spark.operators.indexing import index_rows
-            crows = spark.read.parquet(chunks_path).where(
-                F.col("bucket").isin(wave))
-            idx = index_rows(
-                crows.select(
-                    F.col("url").alias("doc_id"),
-                    F.col("chunk_text").alias("content_with_weight"),
-                    F.lit(None).cast("binary").alias("image"),
-                    "chunk_seq", "bucket"),
-                kb_id,
-                create_time=index_create_time,
-                create_timestamp=index_clock)
-            _write_partitioned(idx, f"{output_dir}/index")
-        wall_ms = int((time.perf_counter() - t0) * 1000)
+        with _persisted(ex.parse_pages(sub)) as parsed, \
+                _persisted(ex.chunk_parsed(parsed, template)
+                           .withColumn("bucket", bucket)) as chunks:
+            extracted = (parsed.drop(*ex.SECTION_COLUMNS)
+                         .withColumn("bucket", bucket))
+            _write_partitioned(extracted, extracted_path)
+            _write_partitioned(chunks, chunks_path)
+            if index:
+                # search-store rows (build_chunks field assembly,
+                # rag/svr/task_executor.py:256-293) from the written
+                # chunk rows; embedding is a model seam the cluster job
+                # adds via indexing.embed_chunks(encode=<pandas UDF>)
+                from ragflow_spark.operators.indexing import index_rows
+                idx = index_rows(
+                    chunks.select(
+                        F.col("url").alias("doc_id"),
+                        F.col("chunk_text").alias("content_with_weight"),
+                        F.lit(None).cast("binary").alias("image"),
+                        "chunk_seq", "bucket"),
+                    kb_id,
+                    create_time=index_create_time,
+                    create_timestamp=index_clock)
+                _write_partitioned(idx, f"{output_dir}/index")
+            wall_ms = int((time.perf_counter() - t0) * 1000)
 
-        # metrics from the committed files (exact, no extra lineage cache)
-        edf = spark.read.parquet(extracted_path).where(
-            F.col("bucket").isin(wave))
-        cdf = spark.read.parquet(chunks_path).where(
-            F.col("bucket").isin(wave))
-        emet = {r["bucket"]: r for r in
-                edf.groupBy("bucket").agg(
-                    F.count("*").alias("n_docs"),
-                    F.sum(F.octet_length("extracted_text"))
-                    .alias("n_bytes")).collect()}
-        cmet = {r["bucket"]: r["n_chunks"] for r in
-                cdf.groupBy("bucket").agg(
-                    F.count("*").alias("n_chunks")).collect()}
+            # metrics: Spark aggregates over the persisted rows the
+            # writes consumed, so exact under stage retries (unlike
+            # accumulators)
+            emet = {r["bucket"]: r for r in
+                    extracted.groupBy("bucket").agg(
+                        F.count("*").alias("n_docs"),
+                        F.sum(F.octet_length("extracted_text"))
+                        .alias("n_bytes")).collect()}
+            cmet = {r["bucket"]: r["n_chunks"] for r in
+                    chunks.groupBy("bucket").agg(
+                        F.count("*").alias("n_chunks")).collect()}
         rows = []
         for b in wave:
             em = emet.get(b)

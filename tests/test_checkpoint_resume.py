@@ -116,6 +116,95 @@ def test_lineage_metrics_cover_all_docs(spark, pages_path, tmp_path):
     assert summ[0].n_bytes > 0 and summ[0].n_chunks > 0
 
 
+def _committed_counts(spark, out_dir):
+    """bucket -> (n_docs, n_chunks, n_bytes) of the files under
+    extracted/ and chunks/."""
+    counts = {}
+    for r in spark.read.parquet(f"{out_dir}/extracted").collect():
+        n_docs, n_chunks, n_bytes = counts.get(r.bucket, (0, 0, 0))
+        counts[r.bucket] = (n_docs + 1, n_chunks,
+                            n_bytes + len(r.extracted_text.encode()))
+    for r in spark.read.parquet(f"{out_dir}/chunks").select(
+            "bucket").collect():
+        n_docs, n_chunks, n_bytes = counts.get(r.bucket, (0, 0, 0))
+        counts[r.bucket] = (n_docs, n_chunks + 1, n_bytes)
+    return counts
+
+
+def _assert_lineage_matches_committed(spark, out_dir):
+    from pyspark.sql.types import StructType
+
+    from ragflow_spark.job.checkpoint import LINEAGE_SCHEMA
+
+    lineage = spark.read.parquet(f"{out_dir}/_checkpoint")
+    assert lineage.schema == StructType.fromDDL(LINEAGE_SCHEMA)
+    rows = lineage.collect()
+    assert sorted(r.bucket for r in rows) == list(range(N_BUCKETS))
+    assert all(r.ts is not None for r in rows)
+    counts = _committed_counts(spark, out_dir)
+    for r in rows:
+        assert (r.n_docs, r.n_chunks, r.n_bytes) == \
+            counts.get(r.bucket, (0, 0, 0)), r.bucket
+
+
+@pytest.fixture
+def arrow_no_fallback(spark):
+    """Arrow conversions that cannot run raise instead of silently
+    taking the pickled-row path."""
+    key = "spark.sql.execution.arrow.pyspark.fallback.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, old)
+
+
+def test_lineage_rows_equal_committed_counts(spark, pages_path, tmp_path,
+                                             arrow_no_fallback):
+    from ragflow_spark.job.run_extract import run_job
+
+    out = str(tmp_path / "out")
+    run_job(spark, pages_path, out, n_buckets=N_BUCKETS, waves=WAVES)
+    _assert_lineage_matches_committed(spark, out)
+
+    out_crash = str(tmp_path / "out_crash")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_job(spark, pages_path, out_crash, n_buckets=N_BUCKETS,
+                waves=WAVES, run_id="run1", fail_after_wave=1)
+    run_job(spark, pages_path, out_crash, n_buckets=N_BUCKETS,
+            waves=WAVES, run_id="run2")
+    _assert_lineage_matches_committed(spark, out_crash)
+
+
+def test_lineage_summary_counts_wave_wall_once(spark, tmp_path):
+    from ragflow_spark.job.checkpoint import append_lineage, lineage_summary
+
+    ckpt = str(tmp_path / "_checkpoint")
+    # 16 buckets over 4 waves; each wave stamps its wall on 4 rows
+    for wave in range(4):
+        append_lineage(spark, ckpt, [
+            {"run_id": "r", "digest": "d", "bucket": b, "n_docs": 1,
+             "n_chunks": 2, "n_bytes": 3, "wall_ms": 100 * (wave + 1),
+             "wave": wave, "status": "ok"}
+            for b in range(wave, 16, 4)])
+    (summ,) = lineage_summary(spark, ckpt).collect()
+    assert (summ.n_buckets, summ.n_docs, summ.n_chunks, summ.n_bytes) == \
+        (16, 16, 32, 48)
+    assert summ.wall_ms == 100 + 200 + 300 + 400
+
+
+def test_failed_wave_leaks_no_cached_blocks(spark, pages_path, tmp_path):
+    from ragflow_spark.job.run_extract import run_job
+
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "chunks").write_text("not a directory")  # the chunk write fails
+    spark.catalog.clearCache()
+    with pytest.raises(Exception):
+        run_job(spark, pages_path, str(out), n_buckets=N_BUCKETS,
+                waves=WAVES)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_index_stage_rows(spark, pages_path, tmp_path):
     """--index writes search-store rows whose ids are the reference
     xxh64(content + doc_id) over the committed chunk files."""

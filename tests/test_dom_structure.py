@@ -25,6 +25,8 @@ golden, and a live re-derivation of the head-closer relation.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from ragflow_spark.extractlib.dom import (_HEAD_CLOSERS, find_first,
@@ -444,6 +446,9 @@ DOCTYPE_GOLDENS = [
      "<html><body><p>a </p></body></html>"),
     ("<p>a<!doctype html>b</html>x",
      "<html><body><p>ab</p></body></html>"),
+    # a comment disarms it too: the end tag after it closes normally
+    ("<p>a<!doctype html><!-- c --></p>b",
+     "<html><body><p>a</p>b</body></html>"),
     # quirk-eaten '<' classing: dropped at document level, verbatim at
     # html level
     ("<!doctype a><!doctype b></html>x",
@@ -476,8 +481,10 @@ def test_doctype_goldens(html, want):
 def test_doctype_goldens_against_live_library():
     _lib_or_skip()
     from tools.libxml_oracle import serialize_root
+    # libxml2 keeps comment nodes; dom.py drops them at parse time
+    strip = re.compile(r"<!--.*?--!?>", re.S)
     for html, want in DOCTYPE_GOLDENS:
-        assert serialize_root(html) == want, html
+        assert strip.sub("", serialize_root(html)) == want, html
 
 
 # ---------------------------------------------------------------------

@@ -187,8 +187,10 @@ STRUCT_JUNK = ["</head>", "</body>", "<body>", '<body class="z">',
                "<html>dup", "</html>", "<html lang=\"x\">",
                # misplaced doctypes: the one-shot literalization quirk
                # on the next '</'/'<!' construct, and the reopen
-               # suppression after the root closes (dom.py)
-               "<!doctype html>", "<!DOCTYPE html>", "<!doctypejunk>"]
+               # suppression after the root closes (dom.py); a comment
+               # between the doctype and the end tag disarms the quirk
+               "<!doctype html>", "<!DOCTYPE html>", "<!doctypejunk>",
+               "<!doctype html><!-- c --></p>b"]
 
 
 def gen_fragment(rng: random.Random) -> str:
