@@ -352,29 +352,19 @@ def _q_extract_pdf_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF path through the _concat_downward DFS chain (rule fallback at
     the xgb seam) instead of the vertical merge — byte-identical on
     single-column documents, so it shares the extract_pdf oracle."""
-    import pandas as pd
-
     from ragflow_spark.corpus.gen import build_pdf_pages
+    from ragflow_spark.extractlib.templates import extract_pdf_text
+    from ragflow_spark.job.extract import map_documents
 
     pages = build_pdf_pages(spark, sf_dir)
 
-    def gen(it):
-        from ragflow_spark.extractlib.templates import extract_pdf_text
+    def extract(url, blob):
+        title, text, n, _ = extract_pdf_text(blob, "chain")
+        return [(url, title, text, n)]
 
-        for pdf in it:
-            rows = {"url": [], "title": [], "extracted_text": [],
-                    "n_sections": []}
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                title, text, n, _ = extract_pdf_text(bytes(blob), "chain")
-                rows["url"].append(url)
-                rows["title"].append(title)
-                rows["extracted_text"].append(text)
-                rows["n_sections"].append(n)
-            yield pd.DataFrame(rows)
-
-    return pages.select("url", "html").mapInPandas(
-        gen, schema=("url string, title string, extracted_text string, "
-                     "n_sections int"))
+    return map_documents(
+        pages.select("url", "html"), extract,
+        "url string, title string, extracted_text string, n_sections int")
 
 
 def _q_extract_pdf_frag(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -606,53 +596,38 @@ def _q_chunks_manual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """manual template (rag/app/manual.py:186-258, no-outline path):
     pivot-level section ids + the 32/1024 token-budget fold (append
     branch keeps the pivot id — reference quirk)."""
-    import pandas as pd
-
     from ragflow_spark.corpus.gen import build_pdf_pages
+    from ragflow_spark.extractlib.pdfrules import pdf_to_sections
+    from ragflow_spark.extractlib.templates import manual_pdf
+    from ragflow_spark.job.extract import map_documents
 
     pages = build_pdf_pages(spark, sf_dir)
 
-    def gen(it):
-        from ragflow_spark.extractlib.templates import chunk_manual_pdf
+    def chunks(url, blob):
+        return [(url, seq, ck) for seq, ck in
+                enumerate(manual_pdf(pdf_to_sections(blob)))]
 
-        for pdf in it:
-            rows = {"url": [], "chunk_seq": [], "chunk_text": []}
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                for seq, ck in enumerate(chunk_manual_pdf(bytes(blob))):
-                    rows["url"].append(url)
-                    rows["chunk_seq"].append(seq)
-                    rows["chunk_text"].append(ck)
-            yield pd.DataFrame(rows)
-
-    return pages.select("url", "html").mapInPandas(
-        gen, schema="url string, chunk_seq int, chunk_text string")
+    return map_documents(pages.select("url", "html"), chunks,
+                         "url string, chunk_seq int, chunk_text string")
 
 
 def _q_tokenize_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rag_tokenizer-lite output columns (title_tks / content_ltks):
     Q2B fold, lowercase, per-char CJK, script-run split (SURVEY §2.7 —
     token columns sit outside the byte-identity invariant)."""
-    import pandas as pd
+    from ragflow_spark.extractlib.ragtok import tokenize
+    from ragflow_spark.job.extract import map_documents
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
-    def gen(it):
-        from ragflow_spark.extractlib.ragtok import tokenize
+    def tokens(doc_id, text, lang):
+        title = (f"文档 {int(doc_id)}" if lang == "zh"
+                 else f"Document {int(doc_id)}")
+        return [(doc_id, tokenize(title), tokenize(text))]
 
-        for pdf in it:
-            titles, ltks = [], []
-            for doc_id, text, lang in zip(pdf["doc_id"], pdf["text"],
-                                          pdf["lang"]):
-                title = (f"文档 {int(doc_id)}" if lang == "zh"
-                         else f"Document {int(doc_id)}")
-                titles.append(tokenize(title))
-                ltks.append(tokenize(text))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "title_tks": titles,
-                                "content_ltks": ltks})
-
-    return docs.select("doc_id", "text", "lang").mapInPandas(
-        gen, schema="doc_id long, title_tks string, content_ltks string")
+    return map_documents(
+        docs.select("doc_id", "text", "lang"), tokens,
+        "doc_id long, title_tks string, content_ltks string")
 
 
 def _q_chunks_docx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -713,27 +688,19 @@ def _q_chunks_laws_docx(spark: SparkSession, sf_dir: str) -> DataFrame:
     the title chunk collects every heading as its children (first
     populated deeper level), each heading chunk collects its body,
     and visited one-line spans are skipped."""
-    import pandas as pd
-
     from ragflow_spark.corpus.gen import build_docx_pages
+    from ragflow_spark.extractlib.docxparse import parse_docx
+    from ragflow_spark.extractlib.templates import laws_docx
+    from ragflow_spark.job.extract import map_documents
 
     pages = build_docx_pages(spark, sf_dir)
 
-    def gen(it):
-        from ragflow_spark.extractlib.templates import chunk_laws_docx
+    def chunks(url, blob):
+        return [(url, seq, text) for seq, text in
+                enumerate(laws_docx(parse_docx(blob)[0]))]
 
-        for pdf in it:
-            urls, seqs, texts = [], [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                for seq, text in enumerate(chunk_laws_docx(bytes(blob))):
-                    urls.append(url)
-                    seqs.append(seq)
-                    texts.append(text)
-            yield pd.DataFrame({"url": urls, "chunk_seq": seqs,
-                                "chunk_text": texts})
-
-    return pages.select("url", "html").mapInPandas(
-        gen, schema="url string, chunk_seq int, chunk_text string")
+    return map_documents(pages.select("url", "html"), chunks,
+                         "url string, chunk_seq int, chunk_text string")
 
 
 def _q_chunks_qa_docx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -742,30 +709,19 @@ def _q_chunks_qa_docx(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulate answers (leading-newline quirk kept), each new
     same-or-higher heading flushes a (stacked question, answer) pair.
     """
-    import pandas as pd
-
     from ragflow_spark.corpus.gen import build_docx_pages
+    from ragflow_spark.extractlib.qa import qa_pairs_from_docx
+    from ragflow_spark.job.extract import map_documents
 
     pages = build_docx_pages(spark, sf_dir)
 
-    def gen(it):
-        from ragflow_spark.extractlib.qa import qa_pairs_from_docx
+    def pairs(url, blob):
+        return [(url, seq, q, a) for seq, (q, a) in
+                enumerate(qa_pairs_from_docx(blob))]
 
-        for pdf in it:
-            urls, seqs, qs, ans = [], [], [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                for seq, (q, a) in enumerate(
-                        qa_pairs_from_docx(bytes(blob))):
-                    urls.append(url)
-                    seqs.append(seq)
-                    qs.append(q)
-                    ans.append(a)
-            yield pd.DataFrame({"url": urls, "pair_seq": seqs,
-                                "question": qs, "answer": ans})
-
-    return pages.select("url", "html").mapInPandas(
-        gen, schema="url string, pair_seq int, question string, "
-                    "answer string")
+    return map_documents(
+        pages.select("url", "html"), pairs,
+        "url string, pair_seq int, question string, answer string")
 
 
 def _q_chunks_book_docx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -773,84 +729,55 @@ def _q_chunks_book_docx(spark: SparkSession, sf_dir: str) -> DataFrame:
     DocxParser sections through TOC removal, colon-title split, bullet
     vote, hierarchical_merge depth 5; whitespace-only chunks dropped at
     tokenize_chunks time (seq keeps its slot, reference parity)."""
-    import pandas as pd
-
     from ragflow_spark.corpus.gen import build_docx_pages
+    from ragflow_spark.extractlib.docxparse import parse_docx
+    from ragflow_spark.extractlib.templates import book_docx
+    from ragflow_spark.job.extract import map_documents
 
     pages = build_docx_pages(spark, sf_dir)
 
-    def gen(it):
-        from ragflow_spark.extractlib.templates import chunk_book_docx
+    def chunks(url, blob):
+        return [(url, seq, text) for seq, text in
+                enumerate(book_docx(parse_docx(blob)[0])) if text.strip()]
 
-        for pdf in it:
-            urls, seqs, texts = [], [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                for seq, text in enumerate(chunk_book_docx(bytes(blob))):
-                    if not text.strip():
-                        continue
-                    urls.append(url)
-                    seqs.append(seq)
-                    texts.append(text)
-            yield pd.DataFrame({"url": urls, "chunk_seq": seqs,
-                                "chunk_text": texts})
-
-    return pages.select("url", "html").mapInPandas(
-        gen, schema="url string, chunk_seq int, chunk_text string")
+    return map_documents(pages.select("url", "html"), chunks,
+                         "url string, chunk_seq int, chunk_text string")
 
 
 def _q_chunks_manual_docx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Manual template, DOCX branch (rag/app/manual.py:111-151): the
     QA heading-stack walk emitting '{stacked question}\\n{answer}'
     texts (double newline — the answer carries its own)."""
-    import pandas as pd
-
     from ragflow_spark.corpus.gen import build_docx_pages
+    from ragflow_spark.extractlib.qa import manual_sections_from_docx
+    from ragflow_spark.job.extract import map_documents
 
     pages = build_docx_pages(spark, sf_dir)
 
-    def gen(it):
-        from ragflow_spark.extractlib.qa import manual_sections_from_docx
+    def chunks(url, blob):
+        return [(url, seq, text) for seq, text in
+                enumerate(manual_sections_from_docx(blob))]
 
-        for pdf in it:
-            urls, seqs, texts = [], [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                for seq, text in enumerate(
-                        manual_sections_from_docx(bytes(blob))):
-                    urls.append(url)
-                    seqs.append(seq)
-                    texts.append(text)
-            yield pd.DataFrame({"url": urls, "chunk_seq": seqs,
-                                "chunk_text": texts})
-
-    return pages.select("url", "html").mapInPandas(
-        gen, schema="url string, chunk_seq int, chunk_text string")
+    return map_documents(pages.select("url", "html"), chunks,
+                         "url string, chunk_seq int, chunk_text string")
 
 
 def _q_docx_tables_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QA/manual docx table render (qa.py:241-259): equal-cell runs
     merge into colspans, with the reference's scan-all-later quirk
     (a cell between two equal non-adjacent cells is never rendered)."""
-    import pandas as pd
-
     from ragflow_spark.corpus.gen import build_docx_pages
+    from ragflow_spark.extractlib.docxparse import tables_html
+    from ragflow_spark.job.extract import map_documents
 
     pages = build_docx_pages(spark, sf_dir)
 
-    def gen(it):
-        from ragflow_spark.extractlib.docxparse import tables_html
+    def tables(url, blob):
+        return [(url, seq, html)
+                for seq, html in enumerate(tables_html(blob))]
 
-        for pdf in it:
-            urls, seqs, htmls = [], [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                for seq, html in enumerate(tables_html(bytes(blob))):
-                    urls.append(url)
-                    seqs.append(seq)
-                    htmls.append(html)
-            yield pd.DataFrame({"url": urls, "table_seq": seqs,
-                                "html": htmls})
-
-    return pages.select("url", "html").mapInPandas(
-        gen, schema="url string, table_seq int, html string")
+    return map_documents(pages.select("url", "html"), tables,
+                         "url string, table_seq int, html string")
 
 
 def _q_docx_table_titles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -859,29 +786,19 @@ def _q_docx_table_titles(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefixed with the extension-stripped document name, ' > '-joined."""
     import re as _re
 
-    import pandas as pd
-
     from ragflow_spark.corpus.gen import build_docx_pages
+    from ragflow_spark.extractlib.docxparse import table_title_context
+    from ragflow_spark.job.extract import map_documents
 
     pages = build_docx_pages(spark, sf_dir)
 
-    def gen(it):
-        from ragflow_spark.extractlib.docxparse import table_title_context
+    def contexts(url, blob):
+        name = _re.sub(r"\.[a-zA-Z]+$", "", url)
+        return [(url, seq, ctx) for seq, ctx in
+                enumerate(table_title_context(blob, name))]
 
-        for pdf in it:
-            urls, seqs, ctxs = [], [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                name = _re.sub(r"\.[a-zA-Z]+$", "", url)
-                for seq, ctx in enumerate(
-                        table_title_context(bytes(blob), name)):
-                    urls.append(url)
-                    seqs.append(seq)
-                    ctxs.append(ctx)
-            yield pd.DataFrame({"url": urls, "table_seq": seqs,
-                                "context": ctxs})
-
-    return pages.select("url", "html").mapInPandas(
-        gen, schema="url string, table_seq int, context string")
+    return map_documents(pages.select("url", "html"), contexts,
+                         "url string, table_seq int, context string")
 
 
 def _q_chunks_xlsx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -911,26 +828,19 @@ def _q_chunks_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tika -> from-scratch CFB/MS-DOC piece-table extraction, content
     lines as sections, naive_merge(128) greedy fold."""
     from ragflow_spark.corpus.gen import build_doc_pages
+    from ragflow_spark.extractlib.docparse import doc_lines
+    from ragflow_spark.extractlib.merge import naive_merge
+    from ragflow_spark.job.extract import map_documents
 
     pages = build_doc_pages(spark, sf_dir)
 
-    def gen(it):
-        from ragflow_spark.extractlib.docparse import doc_lines
-        from ragflow_spark.extractlib.merge import naive_merge
-        for pdf in it:
-            rows = {"url": [], "chunk_seq": [], "chunk_text": []}
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                sections = [(ln, "") for ln in doc_lines(bytes(blob))]
-                for seq, text in enumerate(
-                        naive_merge(sections, 128, "\n!?。；！？")):
-                    rows["url"].append(url)
-                    rows["chunk_seq"].append(seq)
-                    rows["chunk_text"].append(text)
-            import pandas as pd
-            yield pd.DataFrame(rows)
+    def chunks(url, blob):
+        sections = [(ln, "") for ln in doc_lines(blob)]
+        return [(url, seq, text) for seq, text in
+                enumerate(naive_merge(sections, 128, "\n!?。；！？"))]
 
-    return pages.mapInPandas(
-        gen, schema="url string, chunk_seq int, chunk_text string")
+    return map_documents(pages.select("url", "html"), chunks,
+                         "url string, chunk_seq int, chunk_text string")
 
 
 def _q_chunks_ppt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -951,29 +861,22 @@ def _q_pdf_scraps(spark: SparkSession, sf_dir: str) -> DataFrame:
     folio junk (skipped by ``usefull``, then dropped as nan-width
     groups)."""
     from ragflow_spark.corpus.gen import build_scrap_pages
+    from ragflow_spark.extractlib.pdfplain import PAGE_H
+    from ragflow_spark.extractlib.pdfrules import (
+        PAGE_W, filterout_scraps, mean_heights, parse_boxes_normalized)
+    from ragflow_spark.job.extract import map_documents
 
     pages = build_scrap_pages(spark, sf_dir)
 
-    def gen(it):
-        import pandas as pd
-        from ragflow_spark.extractlib.pdfplain import PAGE_H
-        from ragflow_spark.extractlib.pdfrules import (
-            PAGE_W, filterout_scraps, mean_heights,
-            parse_boxes_normalized)
-        for pdf in it:
-            rows = {"url": [], "content": []}
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                boxes = parse_boxes_normalized(bytes(blob))
-                n_pages = max((b["page_number"] for b in boxes),
-                              default=1)
-                mh = mean_heights(boxes, n_pages)
-                rows["url"].append(url)
-                rows["content"].append(filterout_scraps(
-                    boxes, [PAGE_W] * n_pages, mh,
-                    [PAGE_H] * n_pages))
-            yield pd.DataFrame(rows)
+    def scraps(url, blob):
+        boxes = parse_boxes_normalized(blob)
+        n_pages = max((b["page_number"] for b in boxes), default=1)
+        return [(url, filterout_scraps(boxes, [PAGE_W] * n_pages,
+                                       mean_heights(boxes, n_pages),
+                                       [PAGE_H] * n_pages))]
 
-    return pages.mapInPandas(gen, schema="url string, content string")
+    return map_documents(pages.select("url", "html"), scraps,
+                         "url string, content string")
 
 
 def _kg_inputs(spark: SparkSession, sf_dir: str):
@@ -2621,27 +2524,18 @@ def _q_xlsx_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     """naive template XLSX branch (rag/app/naive.py:419 with
     excel_parser.html chunk_rows=12): per-sheet <table> chunks with
     repeated <th> header and the sheet-name caption."""
-    import pandas as pd
-
     from ragflow_spark.corpus.gen import build_xlsx_pages
+    from ragflow_spark.extractlib.xlsxparse import xlsx_html
+    from ragflow_spark.job.extract import map_documents
 
     pages = build_xlsx_pages(spark, sf_dir)
 
-    def gen(it):
-        from ragflow_spark.extractlib.xlsxparse import xlsx_html
+    def chunks(url, blob):
+        return [(url, seq, html)
+                for seq, html in enumerate(xlsx_html(blob, 12))]
 
-        for pdf in it:
-            urls, seqs, htmls = [], [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                for seq, html in enumerate(xlsx_html(bytes(blob), 12)):
-                    urls.append(url)
-                    seqs.append(seq)
-                    htmls.append(html)
-            yield pd.DataFrame({"url": urls, "chunk_seq": seqs,
-                                "html": htmls})
-
-    return pages.select("url", "html").mapInPandas(
-        gen, schema="url string, chunk_seq int, html string")
+    return map_documents(pages.select("url", "html"), chunks,
+                         "url string, chunk_seq int, html string")
 
 
 def _q_csv_rows(spark: SparkSession, sf_dir: str) -> DataFrame:

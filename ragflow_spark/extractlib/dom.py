@@ -1319,6 +1319,20 @@ class _TreeBuilder(HTMLParser):
             # anything else up to the next '<') rejoins ordinary text
             self._emit_literal_lt()
             return i + 1
+        # libxml2's '</' recovery: when the next char cannot START an
+        # end-tag name (not [a-zA-Z_:.]) the two chars '</' are
+        # DROPPED and tokenization resumes as character data ('a </>
+        # b' yields the text 'a > b') — stdlib html.parser instead
+        # swallows everything to the next '>' as a bogus comment.
+        # Name-start chars fall through: both parsers then consume to
+        # '>' and the QName-local / unknown-name end tag is ignored
+        # by handle_endtag, which is already equivalent.  A hidden
+        # invalid char (the sentinel) cannot start a name either, so
+        # this runs before the invalid-char branch ('a</\x0cp>b'
+        # keeps 'p>b' as text).
+        if i + 2 < len(rawdata) \
+                and rawdata[i + 2] not in _ENDNAME_START:
+            return i + 2
         gt0 = rawdata.find(">", i)
         span_end = gt0 if gt0 != -1 else len(rawdata)
         if self._hide_inv and _INV_SENTINEL in rawdata[i:span_end]:
@@ -1337,17 +1351,6 @@ class _TreeBuilder(HTMLParser):
                 self.handle_endtag(m.group(1))
             self._stopped = True
             return len(rawdata)
-        # libxml2's '</' recovery: when the next char cannot START an
-        # end-tag name (not [a-zA-Z_:.]) the two chars '</' are
-        # DROPPED and tokenization resumes as character data ('a </>
-        # b' yields the text 'a > b') — stdlib html.parser instead
-        # swallows everything to the next '>' as a bogus comment.
-        # Name-start chars fall through: both parsers then consume to
-        # '>' and the QName-local / unknown-name end tag is ignored
-        # by handle_endtag, which is already equivalent.
-        if i + 2 < len(rawdata) \
-                and rawdata[i + 2] not in _ENDNAME_START:
-            return i + 2
         return super().parse_endtag(i)
 
     def close(self):

@@ -286,20 +286,6 @@ def chunk_paper_pdf(binary: bytes, keep_tags: bool = False) -> list[str]:
     return paper_pdf(pdf_to_sections(binary), keep_tags)
 
 
-def chunk_manual_pdf(binary: bytes, keep_tags: bool = False) -> list[str]:
-    return manual_pdf(pdf_to_sections(binary), keep_tags)
-
-
-def chunk_book_docx(binary: bytes) -> list[str]:
-    from .docxparse import parse_docx
-    return book_docx(parse_docx(binary)[0])
-
-
-def chunk_laws_docx(binary: bytes) -> list[str]:
-    from .docxparse import parse_docx
-    return laws_docx(parse_docx(binary)[0])
-
-
 def extract_pdf_text(binary: bytes, merge: str = "auto"
                      ) -> tuple[str, str, int, list[tuple[str, str]]]:
     """PDF bytes -> (title, extracted_text, n_sections, sections): the

@@ -6,7 +6,10 @@ Python invocation per batch of rows, no per-row Python UDFs, no driver-side
 loops (BASELINE.json input_hint). A document is the atomicity unit, exactly
 as in the reference where one task owns one page range
 (rag/svr/task_executor.py:217-246): every pass is a per-document function
-run by the one document-map loop, ``_map_documents``.
+run by the one document-map loop, ``_map_documents``. The same loop, as
+``map_documents(df, doc_fn, schema)``, serves the per-document operators
+(ragflow_spark/operators) and registered queries (__spark_entry__.py), so a
+per-document concern added to it covers every parser.
 
 Physical plan shape (SURVEY.md §4.2):
 
@@ -68,7 +71,10 @@ def _map_documents(frames: Iterator[pd.DataFrame], doc_fn: Callable,
         yield pd.DataFrame.from_records(rows, columns=columns)
 
 
-def _map(df: DataFrame, doc_fn: Callable, schema: str) -> DataFrame:
+def map_documents(df: DataFrame, doc_fn: Callable, schema: str) -> DataFrame:
+    """``df`` -> ``schema`` rows: ``doc_fn`` gets one row's columns in
+    ``df``'s order and returns its output rows; the UDF of every
+    per-document pass, operator and registered query."""
     def batches(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _map_documents(frames, doc_fn, schema)
     return df.mapInPandas(batches, schema=schema)
@@ -132,8 +138,8 @@ def extract_pdf_tables(pages: DataFrame, html: bool = False) -> DataFrame:
     (``html=True``), plus caption+text per figure.  Same map-only plan
     shape as extract_pages — the whole table grid lives inside one
     document, so no shuffle ever carries cell boxes."""
-    return _map(pages.select("url", "html"), partial(_table_rows, html),
-                TABLES_SCHEMA)
+    return map_documents(pages.select("url", "html"),
+                         partial(_table_rows, html), TABLES_SCHEMA)
 
 
 def _office_rows(url: str, blob: bytes) -> list[tuple]:
@@ -182,7 +188,8 @@ def chunk_office(pages: DataFrame) -> DataFrame:
     (paragraphs + composed table lines / sheet row lines). Magic-byte
     dispatch replaces the reference's filename-extension dispatch
     (rag/app/naive.py:335-464), same map-only plan as extract_pages."""
-    return _map(pages.select("url", "html"), _office_rows, OFFICE_SCHEMA)
+    return map_documents(pages.select("url", "html"), _office_rows,
+                         OFFICE_SCHEMA)
 
 
 def _template_chunks(template: str, parser: str, text: str, sections,
@@ -253,9 +260,9 @@ def chunk_parsed(parsed: DataFrame, template: str) -> DataFrame:
     column, no window function / global sort needed — SURVEY.md §2.9)."""
     check_template(template)
     schema = BOOK_CHUNKS_SCHEMA if template == "book" else CHUNKS_SCHEMA
-    return _map(parsed.select("url", "parser", "extracted_text",
-                              *SECTION_COLUMNS),
-                partial(_chunk_document, template), schema)
+    return map_documents(parsed.select("url", "parser", "extracted_text",
+                                       *SECTION_COLUMNS),
+                         partial(_chunk_document, template), schema)
 
 
 def chunk_pages(pages: DataFrame, template: str = "naive") -> DataFrame:

@@ -18,11 +18,10 @@ per-batch memory for multi-MB payloads.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ragflow_spark.job.extract import map_documents
 
 MEDIA_SCHEMA = ("url string, media_type string, payload binary, "
                 "width int, height int, duration_ms int, codec string")
@@ -61,107 +60,70 @@ def build_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = docs.repartition(spark.sparkContext.defaultParallelism,
                             "doc_id")
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("url", "media_type", "payload",
-                                    "width", "height", "duration_ms",
-                                    "codec")}
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                kind = ("image", "audio", "video")[int(doc_id) % 3]
-                n = 64 + int(n_chars) % 64
-                payload = ((int(doc_id) * 31
-                            + np.arange(n, dtype=np.int64) * 7) % 256
-                           ).astype(np.uint8).tobytes()
-                rows["url"].append(
-                    f"https://host{int(doc_id) % 50}.example.com/"
-                    f"{kind}/{int(doc_id)}")
-                rows["media_type"].append(kind)
-                rows["payload"].append(payload)
-                rows["width"].append(64 + int(doc_id) % 128
-                                     if kind == "image" else 0)
-                rows["height"].append(48 + int(doc_id) % 96
-                                      if kind == "image" else 0)
-                rows["duration_ms"].append(
-                    0 if kind == "image" else 1000 + int(doc_id) % 9000)
-                rows["codec"].append(
-                    {"image": "fake-rgb", "audio": "fake-pcm",
-                     "video": "fake-h26x"}[kind])
-            yield pd.DataFrame(rows)
+    def media(doc_id, n_chars):
+        doc_id, n = int(doc_id), 64 + int(n_chars) % 64
+        kind = ("image", "audio", "video")[doc_id % 3]
+        payload = ((doc_id * 31 + np.arange(n, dtype=np.int64) * 7) % 256
+                   ).astype(np.uint8).tobytes()
+        image = kind == "image"
+        return [(f"https://host{doc_id % 50}.example.com/{kind}/{doc_id}",
+                 kind, payload,
+                 64 + doc_id % 128 if image else 0,
+                 48 + doc_id % 96 if image else 0,
+                 0 if image else 1000 + doc_id % 9000,
+                 {"image": "fake-rgb", "audio": "fake-pcm",
+                  "video": "fake-h26x"}[kind])]
 
-    return docs.mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return map_documents(docs, media, MEDIA_SCHEMA)
 
 
 def image_features(media: DataFrame) -> DataFrame:
     """Per-image features via the stub decoder: mean luma + a simple
     gradient edge density. Only image rows are scanned (filter pushes
     into the parquet/Iceberg scan on media_type)."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("url", "width", "height", "mean_luma",
-                                   "edge_density")}
-            for url, payload, w, h in zip(pdf["url"], pdf["payload"],
-                                          pdf["width"], pdf["height"]):
-                img = decode_image(bytes(payload), int(w), int(h))
-                luma = (0.299 * img[..., 0] + 0.587 * img[..., 1]
-                        + 0.114 * img[..., 2])
-                gx = np.abs(np.diff(luma, axis=1)).mean()
-                out["url"].append(url)
-                out["width"].append(int(w))
-                out["height"].append(int(h))
-                out["mean_luma"].append(round(float(luma.mean()), 6))
-                out["edge_density"].append(round(float(gx), 6))
-            yield pd.DataFrame(out)
+    def features(url, payload, w, h):
+        w, h = int(w), int(h)
+        img = decode_image(payload, w, h)
+        luma = (0.299 * img[..., 0] + 0.587 * img[..., 1]
+                + 0.114 * img[..., 2])
+        gx = np.abs(np.diff(luma, axis=1)).mean()
+        return [(url, w, h, round(float(luma.mean()), 6),
+                 round(float(gx), 6))]
 
-    return (media.where(F.col("media_type") == "image")
-            .select("url", "payload", "width", "height")
-            .mapInPandas(gen, schema=FEATURE_SCHEMA))
+    return map_documents(
+        media.where(F.col("media_type") == "image")
+        .select("url", "payload", "width", "height"),
+        features, FEATURE_SCHEMA)
 
 
 def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Sample frames from video rows at a fixed cadence. The explode
     happens inside the UDF (one input row -> duration/every_ms output
     rows) so frame bytes never shuffle."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("url", "frame_idx", "ts_ms", "frame")}
-            for url, payload, dur in zip(pdf["url"], pdf["payload"],
-                                         pdf["duration_ms"]):
-                payload = bytes(payload)
-                for idx, ts in enumerate(range(0, int(dur), every_ms)):
-                    # STUB: a real decoder seeks; the fake slices the
-                    # payload deterministically per timestamp
-                    off = (ts * 7) % max(len(payload) - 16, 1)
-                    out["url"].append(url)
-                    out["frame_idx"].append(idx)
-                    out["ts_ms"].append(ts)
-                    out["frame"].append(payload[off:off + 16])
-            yield pd.DataFrame(out)
+    def frames(url, payload, dur):
+        # STUB: a real decoder seeks; the fake slices the payload
+        # deterministically per timestamp
+        rows = []
+        for idx, ts in enumerate(range(0, int(dur), every_ms)):
+            off = (ts * 7) % max(len(payload) - 16, 1)
+            rows.append((url, idx, ts, payload[off:off + 16]))
+        return rows
 
-    return (media.where(F.col("media_type") == "video")
-            .select("url", "payload", "duration_ms")
-            .mapInPandas(gen, schema=FRAME_SCHEMA))
+    return map_documents(
+        media.where(F.col("media_type") == "video")
+        .select("url", "payload", "duration_ms"), frames, FRAME_SCHEMA)
 
 
 def audio_features(media: DataFrame) -> DataFrame:
     """STUB feature extractor for audio rows: interprets the fake-pcm
     payload as int8 samples (deterministic; a real build decodes)."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"url": [], "duration_ms": [], "rms": [],
-                   "zero_crossings": []}
-            for url, payload, dur in zip(pdf["url"], pdf["payload"],
-                                         pdf["duration_ms"]):
-                samples = np.frombuffer(bytes(payload), dtype=np.int8
-                                        ).astype(np.float64)
-                out["url"].append(url)
-                out["duration_ms"].append(int(dur))
-                out["rms"].append(round(float(
-                    np.sqrt((samples ** 2).mean())), 6))
-                out["zero_crossings"].append(
-                    int((np.diff(np.sign(samples)) != 0).sum()))
-            yield pd.DataFrame(out)
+    def features(url, payload, dur):
+        samples = np.frombuffer(payload, dtype=np.int8).astype(np.float64)
+        rms = round(float(np.sqrt((samples ** 2).mean())), 6)
+        return [(url, int(dur), rms,
+                 int((np.diff(np.sign(samples)) != 0).sum()))]
 
-    return (media.where(F.col("media_type") == "audio")
-            .select("url", "payload", "duration_ms")
-            .mapInPandas(gen, schema=("url string, duration_ms int, "
-                                      "rms double, zero_crossings int")))
+    return map_documents(
+        media.where(F.col("media_type") == "audio")
+        .select("url", "payload", "duration_ms"), features,
+        "url string, duration_ms int, rms double, zero_crossings int")

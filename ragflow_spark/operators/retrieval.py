@@ -17,10 +17,13 @@ seam documented, keyword scorer is what ships here.
 
 from __future__ import annotations
 
+from collections import Counter
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
+
+from ragflow_spark.job.extract import map_documents
 
 # left-to-right double-precision dot / norm folds (shared shape with
 # operators/similarity.py so the DuckDB oracle reproduces scores)
@@ -75,22 +78,14 @@ def doc_postings(docs: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text") -> DataFrame:
     """(id, text) -> (id, term, tf) postings over huqie tokens (the
     content_ltks surface the reference indexes into ES)."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from collections import Counter
+    from ragflow_spark.extractlib.huqie import tokenize
 
-        from ragflow_spark.extractlib.huqie import tokenize
+    def postings(did, text):
+        return [(did, t, n)
+                for t, n in Counter(tokenize(text).split()).items()]
 
-        for pdf in it:
-            ids, terms, tfs = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                for t, n in Counter(tokenize(text).split()).items():
-                    ids.append(did)
-                    terms.append(t)
-                    tfs.append(n)
-            yield pd.DataFrame({id_col: ids, "term": terms, "tf": tfs})
-
-    return docs.select(id_col, text_col).mapInPandas(
-        gen, schema=f"{id_col} long, term string, tf int")
+    return map_documents(docs.select(id_col, text_col), postings,
+                         f"{id_col} long, term string, tf int")
 
 
 def keyword_search(docs: DataFrame, queries: DataFrame,
@@ -242,24 +237,15 @@ def bigram_postings(docs: DataFrame, id_col: str = "doc_id",
     """(id, term, tf) over adjacent huqie-token pairs — the posting
     surface the quoted-phrase boosts match against (the ES match_phrase
     leg of the reference's query DSL, relationally)."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from collections import Counter
+    from ragflow_spark.extractlib.huqie import tokenize
 
-        from ragflow_spark.extractlib.huqie import tokenize
+    def postings(did, text):
+        tks = tokenize(text).split()
+        return [(did, pair, n) for pair, n in Counter(
+            f"{a} {b}" for a, b in zip(tks, tks[1:])).items()]
 
-        for pdf in it:
-            ids, terms, tfs = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                tks = tokenize(text).split()
-                for pair, n in Counter(
-                        f"{a} {b}" for a, b in zip(tks, tks[1:])).items():
-                    ids.append(did)
-                    terms.append(pair)
-                    tfs.append(n)
-            yield pd.DataFrame({id_col: ids, "term": terms, "tf": tfs})
-
-    return docs.select(id_col, text_col).mapInPandas(
-        gen, schema=f"{id_col} long, term string, tf int")
+    return map_documents(docs.select(id_col, text_col), postings,
+                         f"{id_col} long, term string, tf int")
 
 
 def keyword_search_expanded(docs: DataFrame, queries: DataFrame,

@@ -11,10 +11,10 @@ expected output in closed form and value-check the parser end to end
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ragflow_spark.job.extract import map_documents
 
 
 def txt_chunks(docs: DataFrame, chunk_token_num: int = 32) -> DataFrame:
@@ -23,46 +23,30 @@ def txt_chunks(docs: DataFrame, chunk_token_num: int = 32) -> DataFrame:
     them under the token budget, delimiters stay out of chunks
     (txt_parser.py:23-64 semantics; fold parity with the recursive-CTE
     oracle)."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ragflow_spark.extractlib.txtparse import txt_sections
+    from ragflow_spark.extractlib.txtparse import txt_sections
 
-        for pdf in it:
-            out = {"doc_id": [], "chunk_seq": [], "chunk_text": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                chunks = txt_sections(text.encode("utf-8"),
-                                      chunk_token_num, "` `")
-                for seq, (ck, _) in enumerate(chunks):
-                    out["doc_id"].append(doc_id)
-                    out["chunk_seq"].append(seq)
-                    out["chunk_text"].append(ck)
-            yield pd.DataFrame(out)
+    def chunks(doc_id, text):
+        return [(doc_id, seq, ck) for seq, (ck, _) in enumerate(
+            txt_sections(text.encode("utf-8"), chunk_token_num, "` `"))]
 
-    return docs.select("doc_id", "text").mapInPandas(
-        gen, schema="doc_id long, chunk_seq int, chunk_text string")
+    return map_documents(docs.select("doc_id", "text"), chunks,
+                         "doc_id long, chunk_seq int, chunk_text string")
 
 
 def json_chunks(docs: DataFrame) -> DataFrame:
     """RAGFlowJsonParser over a per-doc JSON object; at corpus sizes the
     splitter keeps one chunk whose serialization round-trips the input
     (json_parser.py:37-43)."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ragflow_spark.extractlib.jsonparse import json_sections
+    from ragflow_spark.extractlib.jsonparse import json_sections
 
-        for pdf in it:
-            out = {"doc_id": [], "chunk_seq": [], "chunk_text": []}
-            for doc_id, text, lang in zip(pdf["doc_id"], pdf["text"],
-                                          pdf["lang"]):
-                blob = json.dumps(
-                    {"id": int(doc_id), "text": text, "lang": lang},
-                    ensure_ascii=False).encode("utf-8")
-                for seq, ck in enumerate(json_sections(blob)):
-                    out["doc_id"].append(doc_id)
-                    out["chunk_seq"].append(seq)
-                    out["chunk_text"].append(ck)
-            yield pd.DataFrame(out)
+    def chunks(doc_id, text, lang):
+        blob = json.dumps({"id": int(doc_id), "text": text, "lang": lang},
+                          ensure_ascii=False).encode("utf-8")
+        return [(doc_id, seq, ck)
+                for seq, ck in enumerate(json_sections(blob))]
 
-    return docs.select("doc_id", "text", "lang").mapInPandas(
-        gen, schema="doc_id long, chunk_seq int, chunk_text string")
+    return map_documents(docs.select("doc_id", "text", "lang"), chunks,
+                         "doc_id long, chunk_seq int, chunk_text string")
 
 
 def md_parse(docs: DataFrame) -> DataFrame:
@@ -71,144 +55,98 @@ def md_parse(docs: DataFrame) -> DataFrame:
     verifies table extraction and the heading chain-glue
     (markdown_parser.py:24-77, naive.py:296-307). The glue quirk makes a
     leading-heading doc collapse to one section — replicated."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ragflow_spark.extractlib.mdparse import markdown_sections
+    from ragflow_spark.extractlib.mdparse import markdown_sections
 
-        for pdf in it:
-            out = {"doc_id": [], "n_sections": [], "section_text": [],
-                   "n_tables": [], "table_text": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                md = f"# Doc {int(doc_id)}\n\n{text}"
-                if int(doc_id) % 4 == 0:
-                    md += (f"\n| k | v |\n|---|---|\n"
-                           f"| a | {int(doc_id)} |\n")
-                sections, tables = markdown_sections(md.encode("utf-8"))
-                out["doc_id"].append(doc_id)
-                out["n_sections"].append(len(sections))
-                out["section_text"].append(
-                    sections[0][0] if sections else "")
-                out["n_tables"].append(len(tables))
-                out["table_text"].append(tables[0] if tables else "")
-            yield pd.DataFrame(out)
+    def parse(doc_id, text):
+        md = f"# Doc {int(doc_id)}\n\n{text}"
+        if int(doc_id) % 4 == 0:
+            md += f"\n| k | v |\n|---|---|\n| a | {int(doc_id)} |\n"
+        sections, tables = markdown_sections(md.encode("utf-8"))
+        return [(doc_id, len(sections), sections[0][0] if sections else "",
+                 len(tables), tables[0] if tables else "")]
 
-    return docs.select("doc_id", "text").mapInPandas(
-        gen, schema=("doc_id long, n_sections int, section_text string, "
-                     "n_tables int, table_text string"))
+    return map_documents(
+        docs.select("doc_id", "text"), parse,
+        "doc_id long, n_sections int, section_text string, n_tables int, "
+        "table_text string")
 
 
 def qa_chunks(docs: DataFrame) -> DataFrame:
     """qa template, txt branch (rag/app/qa.py:334-371): tab-delimited
     Q/A lines -> delimiter vote -> pair accumulation -> beAdoc content
     strings ('Question: ...\\tAnswer: ...', zh prefixes for zh docs)."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ragflow_spark.extractlib.qa import (be_adoc_text,
-                                                 qa_pairs_from_txt)
+    from ragflow_spark.extractlib.qa import be_adoc_text, qa_pairs_from_txt
 
-        for pdf in it:
-            out = {"doc_id": [], "pair_seq": [], "content": []}
-            for doc_id, text, lang in zip(pdf["doc_id"], pdf["text"],
-                                          pdf["lang"]):
-                words = text.split(" ")[:5]
-                txt = "\n".join(
-                    f"what is {w}?\t{w} is term {i + 1}"
-                    for i, w in enumerate(words))
-                for seq, (q, a) in enumerate(qa_pairs_from_txt(txt)):
-                    out["doc_id"].append(doc_id)
-                    out["pair_seq"].append(seq)
-                    out["content"].append(
-                        be_adoc_text(q, a, eng=lang != "zh"))
-            yield pd.DataFrame(out)
+    def pairs(doc_id, text, lang):
+        txt = "\n".join(f"what is {w}?\t{w} is term {i + 1}"
+                        for i, w in enumerate(text.split(" ")[:5]))
+        return [(doc_id, seq, be_adoc_text(q, a, eng=lang != "zh"))
+                for seq, (q, a) in enumerate(qa_pairs_from_txt(txt))]
 
-    return docs.select("doc_id", "text", "lang").mapInPandas(
-        gen, schema="doc_id long, pair_seq int, content string")
+    return map_documents(docs.select("doc_id", "text", "lang"), pairs,
+                         "doc_id long, pair_seq int, content string")
 
 
 def email_chunks(docs: DataFrame) -> DataFrame:
     """email template (rag/app/email.py): per-doc multipart MIME message
     (headers, text/plain body, text/html alternative) walked with the
     stdlib parser, then txt-parse + html-parse + naive_merge(128)."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ragflow_spark.extractlib.email_parse import chunk_email
+    from ragflow_spark.extractlib.email_parse import chunk_email
 
-        for pdf in it:
-            out = {"doc_id": [], "chunk_seq": [], "chunk_text": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                body = " ".join(text.split(" ")[:8])
-                eml = (
-                    f"From: sender{int(doc_id)}@example.com\r\n"
-                    f"To: dest@example.com\r\n"
-                    f"Subject: Mail {int(doc_id)}\r\n"
-                    f'Content-Type: multipart/alternative; '
-                    f'boundary="BB"\r\n\r\n'
-                    f"--BB\r\nContent-Type: text/plain; "
-                    f'charset="utf-8"\r\n\r\n{body}\r\n'
-                    f"--BB\r\nContent-Type: text/html; "
-                    f'charset="utf-8"\r\n\r\n'
-                    f"<html><head><title>Mail {int(doc_id)}</title>"
-                    f"</head><body><article><p>{body}</p></article>"
-                    f"</body></html>\r\n--BB--\r\n"
-                ).encode()
-                for seq, ck in enumerate(chunk_email(eml)):
-                    out["doc_id"].append(doc_id)
-                    out["chunk_seq"].append(seq)
-                    out["chunk_text"].append(ck)
-            yield pd.DataFrame(out)
+    def chunks(doc_id, text):
+        body = " ".join(text.split(" ")[:8])
+        eml = (
+            f"From: sender{int(doc_id)}@example.com\r\n"
+            f"To: dest@example.com\r\n"
+            f"Subject: Mail {int(doc_id)}\r\n"
+            f'Content-Type: multipart/alternative; '
+            f'boundary="BB"\r\n\r\n'
+            f"--BB\r\nContent-Type: text/plain; "
+            f'charset="utf-8"\r\n\r\n{body}\r\n'
+            f"--BB\r\nContent-Type: text/html; "
+            f'charset="utf-8"\r\n\r\n'
+            f"<html><head><title>Mail {int(doc_id)}</title>"
+            f"</head><body><article><p>{body}</p></article>"
+            f"</body></html>\r\n--BB--\r\n"
+        ).encode()
+        return [(doc_id, seq, ck) for seq, ck in enumerate(chunk_email(eml))]
 
-    return docs.select("doc_id", "text").mapInPandas(
-        gen, schema="doc_id long, chunk_seq int, chunk_text string")
+    return map_documents(docs.select("doc_id", "text"), chunks,
+                         "doc_id long, chunk_seq int, chunk_text string")
 
 
 def table_chunks(docs: DataFrame) -> DataFrame:
     """table template, text branch (rag/app/table.py): per-doc TSV with
     text/int/float/bool/datetime columns -> column type vote -> value
     conversion -> 'col:value; ...' row docs."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ragflow_spark.extractlib.tableparse import chunk_table_txt
+    from ragflow_spark.extractlib.tableparse import chunk_table_txt
 
-        for pdf in it:
-            out = {"doc_id": [], "chunk_seq": [], "chunk_text": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(doc_id)
-                words = text.split(" ")[:2]
-                tsv = "item\tqty\tprice\tok\tts\n"
-                for i, w in enumerate(words):
-                    n = did + i
-                    tsv += (f"{w}\t{n}\t{n}.5\t"
-                            f"{'yes' if n % 2 == 0 else 'no'}\t"
-                            f"2024-01-{n % 28 + 1:02d}\n")
-                for seq, ck in enumerate(chunk_table_txt(tsv.encode())):
-                    out["doc_id"].append(doc_id)
-                    out["chunk_seq"].append(seq)
-                    out["chunk_text"].append(ck)
-            yield pd.DataFrame(out)
+    def chunks(doc_id, text):
+        tsv = "item\tqty\tprice\tok\tts\n"
+        for i, w in enumerate(text.split(" ")[:2]):
+            n = int(doc_id) + i
+            tsv += (f"{w}\t{n}\t{n}.5\t"
+                    f"{'yes' if n % 2 == 0 else 'no'}\t"
+                    f"2024-01-{n % 28 + 1:02d}\n")
+        return [(doc_id, seq, ck)
+                for seq, ck in enumerate(chunk_table_txt(tsv.encode()))]
 
-    return docs.select("doc_id", "text").mapInPandas(
-        gen, schema="doc_id long, chunk_seq int, chunk_text string")
+    return map_documents(docs.select("doc_id", "text"), chunks,
+                         "doc_id long, chunk_seq int, chunk_text string")
 
 
 def tag_chunks(docs: DataFrame) -> DataFrame:
     """tag template, txt branch (rag/app/tag.py): 'content<TAB>tags'
     rows -> (content, tag_kwd array) docs."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ragflow_spark.extractlib.qa import tag_pairs_from_txt
+    from ragflow_spark.extractlib.qa import tag_pairs_from_txt
 
-        for pdf in it:
-            out = {"doc_id": [], "row_seq": [], "content": [],
-                   "tag_kwd": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(doc_id)
-                words = text.split(" ")[:2]
-                txt = "\n".join(
-                    f"{w} item {i + 1}\ttag{i + 1},group.{did % 5}"
-                    for i, w in enumerate(words))
-                for seq, (content, tags) in enumerate(
-                        tag_pairs_from_txt(txt)):
-                    out["doc_id"].append(doc_id)
-                    out["row_seq"].append(seq)
-                    out["content"].append(content)
-                    out["tag_kwd"].append(tags)
-            yield pd.DataFrame(out)
+    def rows(doc_id, text):
+        txt = "\n".join(
+            f"{w} item {i + 1}\ttag{i + 1},group.{int(doc_id) % 5}"
+            for i, w in enumerate(text.split(" ")[:2]))
+        return [(doc_id, seq, content, tags) for seq, (content, tags)
+                in enumerate(tag_pairs_from_txt(txt))]
 
-    return docs.select("doc_id", "text").mapInPandas(
-        gen, schema=("doc_id long, row_seq int, content string, "
-                     "tag_kwd array<string>"))
+    return map_documents(
+        docs.select("doc_id", "text"), rows,
+        "doc_id long, row_seq int, content string, tag_kwd array<string>")

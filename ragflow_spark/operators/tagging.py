@@ -35,6 +35,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ragflow_spark.job.extract import map_documents
+
 S_SMOOTH = 1000
 
 
@@ -157,20 +159,14 @@ def kb_from_docs(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     which is what lets the lift score discriminate on a small corpus
     (production KBs get their selectivity from scale instead). Returns
     (kb_terms (kb_id, term), kb_tags (kb_id, tag))."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ragflow_spark.extractlib.huqie import tokenize
+    from ragflow_spark.extractlib.huqie import tokenize
 
-        for pdf in it:
-            ids, terms = [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                tks = tokenize(text).split()
-                if tks:
-                    ids.append(did)
-                    terms.append(tks[0])
-            yield pd.DataFrame({"kb_id": ids, "term": terms})
+    def first_term(did, text):
+        tks = tokenize(text).split()
+        return [(did, tks[0])] if tks else []
 
-    kb_terms = docs.select("doc_id", "text").mapInPandas(
-        gen, schema="kb_id long, term string")
+    kb_terms = map_documents(docs.select("doc_id", "text"), first_term,
+                             "kb_id long, term string")
     kb_tags = kb_terms.select(
         "kb_id", F.concat(F.lit("w_"), F.col("term")).alias("tag"))
     return kb_terms, kb_tags

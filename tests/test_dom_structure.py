@@ -535,6 +535,10 @@ NUL_GOLDENS = [
      "<html><body><scri>vu</scri></body></html>"),
     ("<html><body><p>x<\x0cb>y</p></body></html>",
      "<html><body><p>x&lt;b&gt;y</p></body></html>"),
+    # an invalid char right after '</' cannot start an end-tag name:
+    # the '</' recovery drops the two chars and 'p>b' stays text
+    ("<html><body><p>a</\x0cp>b</p></body></html>",
+     "<html><body><p>ap&gt;b</p></body></html>"),
     ("<html><body><p>n￾n</p></body></html>",
      "<html><body><p>nn</p></body></html>"),
 ]

@@ -163,13 +163,14 @@ def test_malformed_inputs():
 
 
 def test_chunk_laws_docx_outline_walk():
+    from ragflow_spark.extractlib.docxparse import parse_docx
     from ragflow_spark.extractlib.officegen import build_docx
-    from ragflow_spark.extractlib.templates import chunk_laws_docx
+    from ragflow_spark.extractlib.templates import laws_docx
 
     paras = [("My Title", "Heading1"),
              ("1 Part 1", "Heading2"), ("alpha beta gamma", None),
              ("2 Part 2", "Heading2"), ("delta words", None)]
-    out = chunk_laws_docx(build_docx(paras, []))
+    out = laws_docx(parse_docx(build_docx(paras, []))[0])
     # title collects the headings (first populated deeper level);
     # each heading collects its body; visited bodies vanish
     assert out == ["My Title\n1 Part 1\n2 Part 2",
@@ -178,15 +179,16 @@ def test_chunk_laws_docx_outline_walk():
 
 
 def test_chunk_laws_docx_bullet_levels_without_styles():
+    from ragflow_spark.extractlib.docxparse import parse_docx
     from ragflow_spark.extractlib.officegen import build_docx
-    from ragflow_spark.extractlib.templates import chunk_laws_docx
+    from ragflow_spark.extractlib.templates import laws_docx
 
     # all Normal paragraphs: levels come from the voted bullet family
     # (group 3: Chapter=2, Section=3, Article=4)
     paras = [("Chapter I", None),
              ("Section 1", None), ("Article 1 first rule", None),
              ("Section 2", None), ("Article 2 second rule", None)]
-    out = chunk_laws_docx(build_docx(paras, []))
+    out = laws_docx(parse_docx(build_docx(paras, []))[0])
     assert out[0] == "Chapter I\nSection 1\nSection 2"
     assert "Section 1\nArticle 1 first rule" in out
     assert "Section 2\nArticle 2 second rule" in out
@@ -250,13 +252,15 @@ def test_manual_sections_from_docx():
 
 
 def test_chunk_book_docx_hierarchical_and_orphan_heading():
+    from ragflow_spark.extractlib.docxparse import parse_docx
     from ragflow_spark.extractlib.officegen import build_docx
-    from ragflow_spark.extractlib.templates import chunk_book_docx
+    from ragflow_spark.extractlib.templates import book_docx
 
     paras = [("My Title", "Heading1"),
              ("1 Part 1", "Heading2"), ("alpha beta gamma", None),
              ("2 Part 2", "Heading2"), ("a", None)]  # one-char body
-    out = [c for c in chunk_book_docx(build_docx(paras, [])) if c.strip()]
+    out = [c for c in book_docx(parse_docx(build_docx(paras, []))[0])
+           if c.strip()]
     # heading 1 groups with its body; heading 2's body fails the
     # len>1 section filter, so the heading is never seeded (orphan)
     assert "1 Part 1\nalpha beta gamma" in out
@@ -294,8 +298,7 @@ def test_hostile_office_inputs_never_raise():
                                                     tables_html)
     from ragflow_spark.extractlib.qa import (manual_sections_from_docx,
                                              qa_pairs_from_docx)
-    from ragflow_spark.extractlib.templates import (chunk_book_docx,
-                                                    chunk_laws_docx)
+    from ragflow_spark.extractlib.templates import book_docx, laws_docx
     from ragflow_spark.extractlib.xlsxparse import xlsx_html, xlsx_rows
 
     # a zip that is not OOXML at all
@@ -312,8 +315,8 @@ def test_hostile_office_inputs_never_raise():
         assert table_title_context(blob, "d") == []
         assert qa_pairs_from_docx(blob) == []
         assert manual_sections_from_docx(blob) == []
-        assert chunk_laws_docx(blob) == []
-        assert chunk_book_docx(blob) == []
+        assert laws_docx(parse_docx(blob)[0]) == []
+        assert book_docx(parse_docx(blob)[0]) == []
         # xlsx keeps the reference's CSV fallback: plain text bytes
         # parse as a 'Data' sheet rather than erroring — only assert
         # no-raise plus emptiness for the zip-shaped payloads

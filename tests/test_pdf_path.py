@@ -336,12 +336,12 @@ endstream endobj
 
 
 def test_manual_pdf_token_budget_fold():
-    from ragflow_spark.extractlib.templates import chunk_manual_pdf
+    from ragflow_spark.extractlib.templates import manual_pdf
     long_body = "alpha beta gamma delta " * 12        # ~48 tokens
     secs = [("Section 1", long_body), ("Section 2", long_body),
             ("Section 3", long_body)]
     blob = build_pdf("Manual 9", secs)
-    out = chunk_manual_pdf(blob)
+    out = manual_pdf(pdf_to_sections(blob))
     # each >32-token section starts a new chunk; the title folds into
     # the first (it is under the 32-token floor when appended)
     assert len(out) == 3
@@ -349,4 +349,4 @@ def test_manual_pdf_token_budget_fold():
     assert out[1].startswith("Section 2\n")
     # short sections keep appending under the 32-token floor
     tiny = [(f"{i} Part", "word word") for i in range(1, 5)]
-    assert len(chunk_manual_pdf(build_pdf("T", tiny))) == 1
+    assert len(manual_pdf(pdf_to_sections(build_pdf("T", tiny)))) == 1

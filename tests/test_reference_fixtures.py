@@ -126,18 +126,18 @@ def test_docx_fixture_round2_branches():
     heading outlines, QA stacks, colspan tables, nearest-title chains
     all exercise a hostile Word document the synthetic corpus cannot
     produce."""
-    from ragflow_spark.extractlib.docxparse import (table_title_context,
+    from ragflow_spark.extractlib.docxparse import (parse_docx,
+                                                    table_title_context,
                                                     tables_html)
     from ragflow_spark.extractlib.qa import (manual_sections_from_docx,
                                              qa_pairs_from_docx)
-    from ragflow_spark.extractlib.templates import (chunk_book_docx,
-                                                    chunk_laws_docx)
+    from ragflow_spark.extractlib.templates import book_docx, laws_docx
 
     blob = _blob("test.docx")
     g = GOLD["test.docx.r2"]
-    laws = chunk_laws_docx(blob)
+    laws = laws_docx(parse_docx(blob)[0])
     assert len(laws) == g["laws_n"] and _h(laws) == g["laws"]
-    book = chunk_book_docx(blob)
+    book = book_docx(parse_docx(blob)[0])
     assert len(book) == g["book_n"] and _h(book) == g["book"]
     qa = qa_pairs_from_docx(blob)
     assert len(qa) == g["qa_n"] and _h(qa) == g["qa"]

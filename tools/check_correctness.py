@@ -2,7 +2,10 @@
 __spark_entry__ query on Spark and its oracle SQL on DuckDB at the given
 sf dir, compare row counts and order-insensitive value hashes.
 
-Usage: python tools/check_correctness.py [sf_dir] [--skip q1,q2,...]
+Usage: python tools/check_correctness.py [sf_dir] [--skip=q1,q2,...]
+       [--only=q1,q2,...] [--pandas]
+
+An unknown name in --skip or --only is an error (exit 2).
 
 --skip: omit queries whose DuckDB oracle is O(n^2) in corpus size (the
 pair-dedup family: dedup_minhash, dedup_ngram, simhash_pairs,
@@ -105,6 +108,86 @@ def _pnorm(v):
     return v
 
 
+def oracle_db(sf_dir: str):
+    """DuckDB connection with one view per testdata table of sf_dir."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
+def check_query(spark, con, sf_dir: str, name: str, fn,
+                oracle: str | None, pandas_mode: bool = False
+                ) -> tuple[bool, list[str]]:
+    """Run one registered query on Spark and its oracle SQL (None: a
+    rows-only check) on DuckDB; returns (ok, report lines)."""
+    sdf = fn(spark, sf_dir)
+    scols = sorted(sdf.columns)
+    if pandas_mode:
+        srows = [tuple(r) for r in
+                 sdf.toPandas().itertuples(index=False, name=None)]
+    else:
+        srows = [tuple(r) for r in sdf.collect()]
+    if oracle is None:
+        return True, [f"{name:16s} rows={len(srows):6d}  (rows-only check)"]
+    lines = []
+    ddf = con.sql(oracle)
+    dcols = sorted(ddf.columns)
+    # HUGEINT (an uncast DuckDB integer sum) is collector-
+    # dependent: fetchall() yields plain ints (indistinguishable
+    # from Spark's here) but .df() gives float64 and .arrow()
+    # decimal128 — a comparator that materializes via pandas or
+    # Arrow hashes 60.0/Decimal('60') against Spark's 60 on every
+    # row.  That skew kept msg_fit driver-red for two rounds while
+    # green under this fetchall()-based gate, so an oracle emitting
+    # HUGEINT is now itself a failure.
+    huge = [c for c, t in zip(ddf.columns, map(str, ddf.types))
+            if t in ("HUGEINT", "UHUGEINT")]
+    if huge:
+        lines.append(f"{name:16s} FAIL oracle emits HUGEINT column(s) "
+                     f"{huge} — cast to BIGINT (collector-dependent "
+                     f"materialization)")
+    if pandas_mode:
+        drows = [tuple(r) for r in
+                 ddf.df().itertuples(index=False, name=None)]
+    else:
+        drows = ddf.fetchall()
+    # reorder duck rows to its own column order, hash both
+    norm = _pnorm if pandas_mode else _norm
+    sh = value_hash(srows, list(sdf.columns), norm)
+    dh = value_hash(drows, list(ddf.columns), norm)
+    ok_schema = scols == dcols
+    ok_rows = len(srows) == len(drows)
+    ok_hash = sh == dh
+    ok = ok_schema and ok_rows and ok_hash
+    lines.append(f"{name:16s} rows={len(srows):6d}/{len(drows):6d} "
+                 f"schema={'=' if ok_schema else scols} hash "
+                 f"{'=' if ok_hash else (sh + ' vs ' + dh)}  "
+                 f"{'OK' if ok else 'FAIL'}")
+    if not ok_hash and ok_rows:
+        # show a sample mismatch for debugging
+        ss = sorted(
+            tuple(norm(r[i]) for i in
+                  sorted(range(len(sdf.columns)),
+                         key=lambda i: sdf.columns[i]))
+            for r in srows
+        )
+        dd = sorted(
+            tuple(norm(r[i]) for i in
+                  sorted(range(len(ddf.columns)),
+                         key=lambda i: ddf.columns[i]))
+            for r in drows
+        )
+        for a, b in zip(ss, dd):
+            if a != b:
+                lines.append("  spark: " + repr(a)[:300])
+                lines.append("  duck : " + repr(b)[:300])
+                break
+    return ok and not huge, lines
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     skip: set[str] = set()
@@ -119,32 +202,36 @@ def main() -> int:
                 print(f"error: {a} requires the form {a}=q1,q2,...",
                       file=sys.stderr)
                 return 2
+            names = set(filter(None, a.split("=", 1)[1].split(",")))
             if a.startswith("--skip"):
-                skip = set(a.split("=", 1)[1].split(","))
+                skip = names
             else:
-                only = set(a.split("=", 1)[1].split(","))
+                only = names
     if len(args) > 1:
         print(f"error: unexpected positional arguments {args[1:]} "
               "(only [sf_dir] is accepted)", file=sys.stderr)
         return 2
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     import __spark_entry__ as entrymod
-    from ragflow_spark.job.session import get_spark
+
+    qs = entrymod.queries()
+    # a misspelt name would otherwise run nothing and still pass
+    unknown = sorted((skip | (only or set())) - set(qs))
+    if unknown:
+        print(f"error: unknown query name(s): {', '.join(unknown)}",
+              file=sys.stderr)
+        return 2
 
     import os
+
+    from ragflow_spark.job.session import get_spark
 
     spark = get_spark(
         master=os.environ.get("CHECK_MASTER", "local[8]"),
         shuffle_partitions=int(os.environ.get("CHECK_SHUFFLE", "8")))
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-
-    qs = entrymod.queries()
+    con = oracle_db(sf_dir)
     oracles = entrymod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
@@ -152,70 +239,10 @@ def main() -> int:
             if only is None:
                 print(f"{name:16s} SKIPPED (--skip)")
             continue
-        sdf = fn(spark, sf_dir)
-        scols = sorted(sdf.columns)
-        if pandas_mode:
-            srows = [tuple(r) for r in
-                     sdf.toPandas().itertuples(index=False, name=None)]
-        else:
-            srows = [tuple(r) for r in sdf.collect()]
-        if name not in oracles:
-            print(f"{name:16s} rows={len(srows):6d}  (rows-only check)")
-            continue
-        ddf = con.sql(oracles[name])
-        dcols = sorted(ddf.columns)
-        # HUGEINT (an uncast DuckDB integer sum) is collector-
-        # dependent: fetchall() yields plain ints (indistinguishable
-        # from Spark's here) but .df() gives float64 and .arrow()
-        # decimal128 — a comparator that materializes via pandas or
-        # Arrow hashes 60.0/Decimal('60') against Spark's 60 on every
-        # row.  That skew kept msg_fit driver-red for two rounds while
-        # green under this fetchall()-based gate, so an oracle emitting
-        # HUGEINT is now itself a failure.
-        huge = [c for c, t in zip(ddf.columns, map(str, ddf.types))
-                if t in ("HUGEINT", "UHUGEINT")]
-        if huge:
-            failures += 1
-            print(f"{name:16s} FAIL oracle emits HUGEINT column(s) "
-                  f"{huge} — cast to BIGINT (collector-dependent "
-                  f"materialization)")
-        if pandas_mode:
-            drows = [tuple(r) for r in
-                     ddf.df().itertuples(index=False, name=None)]
-        else:
-            drows = ddf.fetchall()
-        # reorder duck rows to its own column order, hash both
-        norm = _pnorm if pandas_mode else _norm
-        sh = value_hash(srows, list(sdf.columns), norm)
-        dh = value_hash(drows, list(ddf.columns), norm)
-        ok_schema = scols == dcols
-        ok_rows = len(srows) == len(drows)
-        ok_hash = sh == dh
-        status = "OK" if (ok_schema and ok_rows and ok_hash) else "FAIL"
-        if status == "FAIL":
-            failures += 1
-        print(f"{name:16s} rows={len(srows):6d}/{len(drows):6d} "
-              f"schema={'=' if ok_schema else scols} hash "
-              f"{'=' if ok_hash else (sh + ' vs ' + dh)}  {status}")
-        if not ok_hash and ok_rows:
-            # show a sample mismatch for debugging
-            ss = sorted(
-                tuple(norm(r[i]) for i in
-                      sorted(range(len(sdf.columns)),
-                             key=lambda i: sdf.columns[i]))
-                for r in srows
-            )
-            dd = sorted(
-                tuple(norm(r[i]) for i in
-                      sorted(range(len(ddf.columns)),
-                             key=lambda i: ddf.columns[i]))
-                for r in drows
-            )
-            for a, b in zip(ss, dd):
-                if a != b:
-                    print("  spark:", repr(a)[:300])
-                    print("  duck :", repr(b)[:300])
-                    break
+        ok, lines = check_query(spark, con, sf_dir, name, fn,
+                                oracles.get(name), pandas_mode)
+        failures += not ok
+        print("\n".join(lines))
     spark.stop()
     print("FAILURES:", failures)
     return 1 if failures else 0
