@@ -324,9 +324,9 @@ _AMP_SENTINEL = "\ue000"
 # deletes them from character data and attribute VALUES but they still
 # TERMINATE token scans — a reference stops resolving at one
 # ('&#X41f\x0cf' is U+041F + 'f', not U+41FF), and inside a start tag
-# one ends the attribute list.  The sentinel survives through
-# tokenization (breaking ref matches naturally) and is stripped at the
-# text/value sinks.
+# one is a junk token where a name would start.  The sentinel survives
+# through tokenization (breaking ref matches naturally) and is stripped
+# at the text/value sinks.
 _INV_SENTINEL = "\ue001"
 
 # Reference forms after the sentinel swap: numeric (hex / decimal, the
@@ -397,7 +397,8 @@ _ENDNAME_START = frozenset(
 _NAME_CONT_RE = re.compile(r"[a-zA-Z0-9._:-]")
 
 
-def _parse_attrs_libxml(raw: str, hide_refs: bool) -> tuple:
+def _parse_attrs_libxml(raw: str, hide_refs: bool,
+                        hide_inv: bool) -> tuple:
     """Parse attributes from the RAW start-tag text with libxml2's
     htmlParseStartTag algorithm — stdlib html.parser's tolerant scan
     diverges on junk (it makes ``<b/junk>`` an attribute and keeps
@@ -420,7 +421,14 @@ def _parse_attrs_libxml(raw: str, hide_refs: bool) -> tuple:
         the flag must come from this scan, not from which handler
         fired);
       * duplicate names keep the first; names lowercase; values keep
-        case and resolve references with the truncating attr rule.
+        case and resolve references with the truncating attr rule;
+      * an invalid char (``hide_inv``: hidden as the sentinel) fails
+        the name charset, so in the name area it is junk skipped to the
+        next blank (``<p\x0cclass=x id=y>`` keeps only id, ``<p\x0c
+        class=x>`` keeps class); in a value, quoted or not, it is
+        deleted, and where a value would start it starts an unquoted
+        one (``x=\x0c'a'`` -> ``'a'``, ``x=\x0c y`` -> empty x and a
+        minimized y).
     """
     if raw[1:-1].isalnum():
         return {}, False  # fast path: '<div>' — no attrs, no slash
@@ -464,6 +472,8 @@ def _parse_attrs_libxml(raw: str, hide_refs: bool) -> tuple:
                 while k < end and raw[k] not in _WS:
                     k += 1
                 val, i = raw[i:k], k
+            if hide_inv:
+                val = val.replace(_INV_SENTINEL, "")
             if name not in attrs:
                 if hide_refs and _AMP_SENTINEL in val:
                     val = _resolve_attr_value(val)
@@ -1019,32 +1029,21 @@ class _TreeBuilder(HTMLParser):
         if tag is None:
             return
         raw = self.get_starttag_text()
-        if self._hide_inv and raw is not None and _INV_SENTINEL in raw:
-            pruned = _inv_markup_prefix(raw)
-            m = _STARTNAME_NUL_RE.match(pruned)
-            if m is not None:
-                tag2 = _libxml_tag_name(m.group(1))
-                if tag2 is not None:
-                    if not pruned.endswith(">"):
-                        pruned += ">"
-                    ad, selfclose = _parse_attrs_libxml(
-                        pruned, self._hide_refs)
-                    self._insert(tag2, ad, selfclose)
-            return
         if raw is not None and "\x00" in raw:
             # libxml2 treats NUL inside MARKUP as end of input: the
             # scanned prefix of the tag still takes effect ('<p\x00
             # class="x">t' keeps an attributeless <p>, '<p class=x\x00
             # y>' keeps class="x"), then parsing stops and the rest of
             # the document is dropped — probed live
-            prefix = _inv_markup_prefix(raw[:raw.index("\x00")])
-            ad, selfclose = _parse_attrs_libxml(prefix + ">",
-                                                self._hide_refs)
+            ad, selfclose = _parse_attrs_libxml(
+                raw[:raw.index("\x00")] + ">", self._hide_refs,
+                self._hide_inv)
             self._insert(tag, ad, selfclose)
             self._stopped = True
             return
         if raw is not None:
-            ad, selfclose = _parse_attrs_libxml(raw, self._hide_refs)
+            ad, selfclose = _parse_attrs_libxml(raw, self._hide_refs,
+                                                self._hide_inv)
         else:
             selfclose = xml_slash
             ad = {}
@@ -1284,13 +1283,13 @@ class _TreeBuilder(HTMLParser):
             # '<scr\x00ipt>' keeps an empty <scr> — then parsing
             # stops (stdlib would reject the tag and re-emit it
             # as text instead)
-            prefix = _inv_markup_prefix(rawdata[i:nul])
+            prefix = rawdata[i:nul]
             m = _STARTNAME_NUL_RE.match(prefix)
             if m is not None:
                 tag = _libxml_tag_name(m.group(1))
                 if tag is not None:
                     ad, selfclose = _parse_attrs_libxml(
-                        prefix + ">", self._hide_refs)
+                        prefix + ">", self._hide_refs, self._hide_inv)
                     self._insert(tag, ad, selfclose)
             self._stopped = True
             return len(rawdata)
@@ -1381,34 +1380,6 @@ def _is_name_run(seg: str) -> bool:
                              for c in seg)
 
 
-def _inv_markup_prefix(raw: str) -> str:
-    """Invalid characters inside a start tag (probed live): deleted
-    from QUOTED attribute values, but an occurrence in the name /
-    attribute area TERMINATES the tag scan — the remaining attributes
-    are dropped ('<p\x0cclass=x>' keeps an attributeless <p>,
-    '<p class="x\x0cy">' keeps class="xy").  Unquoted-value
-    occurrences also truncate here (the library merges; documented
-    approximation)."""
-    out = []
-    quote = None
-    eq = False  # saw '=', awaiting a value (only there quotes open)
-    for ch in raw:
-        if ch == _INV_SENTINEL:
-            if quote:
-                continue
-            break
-        if quote:
-            if ch == quote:
-                quote = None
-        elif eq:
-            if ch not in " \t\n\r\f":
-                if ch in "\"'":
-                    quote = ch
-                eq = False
-        elif ch == "=":
-            eq = True
-        out.append(ch)
-    return "".join(out)
 _STARTNAME_NUL_RE = re.compile(
     "<([a-zA-Z][^\t\n\r\f />\x00\ue001]*)")
 

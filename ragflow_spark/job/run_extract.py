@@ -13,11 +13,21 @@ Execution shape per wave (SURVEY.md §4.2):
 
     Scan(pages) --filter bucket IN wave--> [salted Repartition]
       -> MapInPandas(extract) -> persist    (one parse per document)
-           -> drop sections    -> write extracted/ (partitioned by bucket,
+           -> drop sections    -> range-cluster on (bucket, url)
+                               -> write extracted/ (partitioned by bucket,
                                   dynamic partition overwrite = idempotent)
-           -> MapInPandas(chunk) -> persist -> write chunks/   (same)
+           -> MapInPandas(chunk) -> persist
+                               -> range-cluster on (bucket, url)
+                               -> write chunks/   (same)
       -> per-bucket agg over both persisted frames (the rows just written)
       -> unpersist -> append lineage rows (commit point)
+
+The range-cluster step gives each write task a contiguous run of
+(bucket, key) rows, so a table gets at most |wave| + parallelism - 1
+files per wave instead of one file per bucket per scan task. Each
+output file has a fixed cost (about 13 ms on a local filesystem), which
+dominates the commit once pages are small. It reads the persisted
+frames, so neither its range sample nor its shuffle re-runs a parser.
 
 Resume: completed (digest, bucket) pairs are loaded from the lineage
 table and filtered out of the scan — no recompute, byte-identical final
@@ -41,6 +51,16 @@ from ragflow_spark.job.salting import salted_repartition
 def _wave_groups(buckets: list[int], waves: int) -> list[list[int]]:
     waves = max(1, min(waves, len(buckets)))
     return [buckets[i::waves] for i in range(waves)]
+
+
+def _clustered(df: DataFrame, key: str) -> DataFrame:
+    """``df`` range-partitioned on (bucket, ``key``) into
+    ``defaultParallelism`` tasks: a bucket's rows land in as few tasks as
+    possible, and a large bucket is still split across tasks. (A hash on
+    bucket alone would leave only |wave| writer tasks when a wave holds
+    fewer buckets than cores.)"""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartitionByRange(n, "bucket", key)
 
 
 def _write_partitioned(df: DataFrame, path: str) -> None:
@@ -119,20 +139,22 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
                            .withColumn("bucket", bucket)) as chunks:
             extracted = (parsed.drop(*ex.SECTION_COLUMNS)
                          .withColumn("bucket", bucket))
-            _write_partitioned(extracted, extracted_path)
-            _write_partitioned(chunks, chunks_path)
+            _write_partitioned(_clustered(extracted, "url"), extracted_path)
+            _write_partitioned(_clustered(chunks, "url"), chunks_path)
             if index:
                 # search-store rows (build_chunks field assembly,
                 # rag/svr/task_executor.py:256-293) from the written
                 # chunk rows; embedding is a model seam the cluster job
-                # adds via indexing.embed_chunks(encode=<pandas UDF>)
+                # adds via indexing.embed_chunks(encode=<pandas UDF>).
+                # Clustered before the id pass, which keeps the
+                # partitioning, so the range sample never runs the id hash
                 from ragflow_spark.operators.indexing import index_rows
                 idx = index_rows(
-                    chunks.select(
+                    _clustered(chunks.select(
                         F.col("url").alias("doc_id"),
                         F.col("chunk_text").alias("content_with_weight"),
                         F.lit(None).cast("binary").alias("image"),
-                        "chunk_seq", "bucket"),
+                        "chunk_seq", "bucket"), "doc_id"),
                     kb_id,
                     create_time=index_create_time,
                     create_timestamp=index_clock)

@@ -16,7 +16,11 @@ from pyspark.sql import SparkSession
 
 # Rows per Arrow batch entering mapInPandas. CC-style pages average tens of
 # KB; 10 MB outliers * 256 rows ~ 2.5 GB worst-case batch would be too big,
-# so keep this small — throughput is CPU-bound in the UDF, not batch-bound.
+# so keep this small. Throughput is not batch-bound: on large pages it is
+# CPU-bound in the UDF; on small pages (~600 B) it is commit-bound, since
+# each output file costs ~13 ms on a local filesystem (about 6 forked
+# processes per file). run_extract range-clusters its partitioned writes
+# to bound the file count per wave for that reason.
 ARROW_BATCH_ROWS = 256
 
 

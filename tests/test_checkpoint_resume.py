@@ -228,6 +228,30 @@ def test_index_stage_rows(spark, pages_path, tmp_path):
         assert r["kb_id"] == "kb9" and r["img_id"] == ""
 
 
+def _data_files(table_dir):
+    return [f for f in table_dir.glob("bucket=*/*")
+            if f.name.startswith("part-")]
+
+
+@pytest.mark.parametrize("waves", [1, 4])
+def test_each_wave_writes_few_files_per_table(spark, pages_path, tmp_path,
+                                              waves):
+    """Rows are range-clustered on (bucket, key) before each partitioned
+    write, so a wave writes at most |wave| + parallelism - 1 files per
+    table, not one per bucket per scan task."""
+    from ragflow_spark.job.run_extract import _wave_groups, run_job
+
+    out = tmp_path / "out"
+    run_job(spark, pages_path, str(out), n_buckets=N_BUCKETS, waves=waves,
+            index=True)
+    par = spark.sparkContext.defaultParallelism
+    bound = sum(len(w) + par - 1
+                for w in _wave_groups(list(range(N_BUCKETS)), waves))
+    for table in ("extracted", "chunks", "index"):
+        n_files = len(_data_files(out / table))
+        assert 0 < n_files <= bound, (table, n_files, bound)
+
+
 def test_unknown_template_rejected_before_any_job(spark, pages_path,
                                                   tmp_path):
     from ragflow_spark.job.extract import chunk_pages

@@ -490,12 +490,12 @@ def test_doctype_goldens_against_live_library():
 # ---------------------------------------------------------------------
 # NUL and invalid-character semantics (probed live): characters failing
 # xmlIsChar (C0 minus tab/LF/CR, U+FFFE/FFFF) are DELETED from
-# character data and quoted attribute values but TERMINATE token scans
-# (a reference stops resolving at one; inside a start tag one ends the
-# attribute list).  NUL is end-of-input in markup scans and at data
-# dispatch positions (run start, right after a resolved reference, or
-# during a pending '&name' scan), a SPACE mid-scan; unresolved NAMED
-# refs keep scanning.
+# character data and attribute values but TERMINATE token scans (a
+# reference stops resolving at one; where an attribute name would start,
+# one is a junk token skipped to the next blank).  NUL is end-of-input
+# in markup scans and at data dispatch positions (run start, right after
+# a resolved reference, or during a pending '&name' scan), a SPACE
+# mid-scan; unresolved NAMED refs keep scanning.
 
 NUL_GOLDENS = [
     ("<html><body><p>a\x00b</p></body></html>",
@@ -531,6 +531,19 @@ NUL_GOLDENS = [
      "<html><body><p>t</p></body></html>"),
     ("<html><body><p cl\x0cass=x>t</p></body></html>",
      "<html><body><p cl>t</p></body></html>"),
+    # next to a blank the junk token is the invalid char alone: the
+    # attribute scan goes on; where a value would start, one starts an
+    # unquoted value and is deleted from it
+    ("<html><body><p\x0c class=x>t</p></body></html>",
+     '<html><body><p class="x">t</p></body></html>'),
+    ("<html><body><p class=x \x0c id=y>t</p></body></html>",
+     '<html><body><p class="x" id="y">t</p></body></html>'),
+    ("<html><body><p class=\x0cx>t</p></body></html>",
+     '<html><body><p class="x">t</p></body></html>'),
+    ("<html><body><p\x0cclass=x id=y>t</p></body></html>",
+     '<html><body><p id="y">t</p></body></html>'),
+    ("<html><body><p class=x\x0cid=y>t</p></body></html>",
+     '<html><body><p class="xid=y">t</p></body></html>'),
     ("<html><body><scri\x0cpt>v</script>u</body></html>",
      "<html><body><scri>vu</scri></body></html>"),
     ("<html><body><p>x<\x0cb>y</p></body></html>",

@@ -81,7 +81,8 @@ ATTR_JUNK = [' ]]x="1"', ']] x="1"', ' x=a"b', ' x = "1"', " x=",
              " X=1", " /junk x=1", " x=1/", ' "junk"', " @foo=1",
              " x==1", ' ]x="a b"', " x= =1", " =1", " x=&copy;",
              ' x."y=1', " 9x=1", " x=a/b", " x=1//", " x/ y=2",
-             " a.b-c_d:e=1", ' x="a\x0cb"', ' x="a\x00b"', " y\x00=2"]
+             " a.b-c_d:e=1", ' x="a\x0cb"', ' x="a\x00b"', " y\x00=2",
+             "\x0c class=x", " class=x \x0c id=y", " class=\x0cx"]
 RAW_CONTAINERS = ["script", "style", "textarea", "title"]
 RAW_CONTENT = ["var a = 1;", "if (a<b && c>d) {}", ".x > .y { }",
                "a &amp; b &#65; &copy; &copy plain", "<p>not a tag</p>"]
