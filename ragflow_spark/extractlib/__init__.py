@@ -1,9 +1,9 @@
-"""Pure-Python extraction core. No Spark imports here — this package is
+"""Extraction core. No Spark imports here — this package is
 imported both by unit tests (in-process) and inside pandas/Arrow UDF workers.
 
 Byte-defining modules (the per-url extracted-text invariant lives here):
   codec      — find_codec equivalent (reference rag/nlp/__init__.py:53-71)
-  dom        — minimal lxml-like DOM on stdlib html.parser
+  dom        — minimal lxml-like DOM parsed by the system libxml2 2.9.14
   readability— Arc90 content scoring (readability-lxml 0.8.1 semantics,
                pinned at reference pyproject.toml:84)
   htmltext   — DOM -> text rendering (html-text 0.6.2 semantics, pinned at

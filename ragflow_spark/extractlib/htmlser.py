@@ -27,7 +27,8 @@ both frozen goldens and a live ctypes differential.  Observed rules:
   ``body`` — serialize ``<tag></tag>``;
 * text nodes escape ``& < >`` only (quotes, whitespace, non-ASCII stay
   raw); ``script``/``style`` contents are written raw;
-* attribute values first escape ``& < >``; then, for URI attributes
+* attribute values drop C0 controls other than TAB/LF/CR (the tree
+  keeps them), then escape ``& < >``; then, for URI attributes
   (``href``/``src``/``action`` on any element, ``name`` on ``<a>``),
   leading blanks (space TAB CR LF) are skipped and each remaining
   UTF-8 byte outside [alnum ``-_.!~*'()`` ``@/:=?;#%&,+<>``] is
@@ -43,12 +44,10 @@ both frozen goldens and a live ctypes differential.  Observed rules:
   ``=""``;
 * ``tounicode`` includes the node's tail (lxml ``with_tail=True``).
 
-Known seam: our DOM drops comments and processing instructions at
-parse time (dom.py module docstring) where readability's
+Known seam: the dom walk drops comments and processing instructions
+(dom.py module docstring) where readability's
 ``Cleaner(comments=True, processing_instructions=True)`` drops them at
-the same stage — identical trees, so no serialization gap; but HTML
-entity references our parser leaves undecoded serialize as their
-literal text, not re-encoded references.
+the same stage — identical trees, so no serialization gap.
 """
 
 from __future__ import annotations
@@ -87,6 +86,10 @@ _URI_KEEP = frozenset(
 )
 
 _BLANKS = " \t\r\n"
+
+# C0 controls but tab/LF/CR: the parser keeps them in attribute values,
+# and xmlNodeListGetString drops them when the dump reads the value
+_DUMP_DROPPED = re.compile("[\x00-\x08\x0b\x0c\x0e-\x1f]")
 
 
 def _escape_text(s: str) -> str:
@@ -138,6 +141,7 @@ def _dump_attrs(node: Node, out: list) -> None:
                 or name in BOOLEAN_ATTRS):
             out.append(" %s" % name)
             continue
+        value = _DUMP_DROPPED.sub("", value)
         if value == "":
             out.append(' %s=""' % name)
             continue

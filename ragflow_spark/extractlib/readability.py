@@ -9,7 +9,7 @@ The reference pipeline pins ``readability-lxml==0.8.1``
     content = html_text.extract_text(html_doc.summary(html_partial=True))
 
 This module re-expresses the published Arc90 algorithm (as shipped in
-readability-lxml 0.8.1) over our stdlib DOM (``dom.py``):
+readability-lxml 0.8.1) over ``dom.Node`` trees parsed by libxml2:
 
   * strip <script>/<style>;
   * ruthless pass: remove "unlikely candidate" elements by class/id regex;
@@ -183,13 +183,13 @@ class Document:
         self.retry_length = retry_length
         # one parsed tree is shared between title() and the first
         # summary pass (title only reads; summary consumes + mutates) —
-        # halves the dominant per-doc cost (stdlib HTMLParser walk)
+        # halves the dominant per-doc cost (the parse and tree copy)
         self._fresh_root: Node | None = None
 
     def _parse(self) -> Node:
         """Parse + the observable part of readability's parse-time
         ``html_cleaner`` (lxml Cleaner flags at readability.py top):
-        comments/PIs are already dropped by our parser (dom.py);
+        comments/PIs are already dropped by the dom walk;
         ``style`` and ``on*`` attributes are deleted
         (style=True/javascript=True) and link attributes carrying a
         javascript:-family scheme are blanked (rewrite_links with

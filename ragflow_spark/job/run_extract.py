@@ -9,6 +9,10 @@ Usage (cluster):
         --output /data/out                # writes extracted/ chunks/ _checkpoint/
         --template naive --buckets 64 --waves 8
 
+Executors need the system libxml2 2.9.14 (``libxml2.so.2``, the library
+lxml links for the reference): ``extractlib.dom`` parses HTML with it
+and refuses to import with any other version.
+
 Execution shape per wave (SURVEY.md §4.2):
 
     Scan(pages) --filter bucket IN wave--> [salted Repartition]

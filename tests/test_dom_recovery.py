@@ -1,20 +1,19 @@
-"""Malformed-HTML recovery parity: dom.py vs libxml2 (what lxml.html,
+"""Malformed-HTML recovery parity: the dom walk vs libxml2 (what lxml.html,
 and therefore readability-lxml, actually parses with).
 
-Three layers:
+Two layers:
   * frozen goldens — one per recovery mechanism, produced by the system
-    libxml2 2.9.14 through tools/libxml_oracle.py;
-  * live re-derivation of the frozen AUTO_CLOSE_PAIRS / _END_PRIORITY
-    relations against the shared library when present;
+    libxml2 2.9.14 through tools/libxml_oracle.py and re-checked live;
   * a seeded random malformed-document differential (tools/html_fuzz).
 """
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
-from ragflow_spark.extractlib.dom import (AUTO_CLOSE_PAIRS, _END_PRIORITY,
-                                          find_first, parse_html)
+from ragflow_spark.extractlib.dom import find_first, parse_html
 from ragflow_spark.extractlib.htmlser import serialize_html
 
 
@@ -97,27 +96,9 @@ def test_goldens_against_live_library():
         assert serialize_subtree(html, "body") == want, html
 
 
-def test_autoclose_table_matches_live_library():
-    """Re-derive the htmlStartClose relation from the shared library and
-    compare with the frozen AUTO_CLOSE_PAIRS."""
-    _lib_or_skip()
-    from tools.derive_autoclose import derive
-    derived = derive()
-    ours = {k: v for k, v in AUTO_CLOSE_PAIRS.items()}
-    assert derived == ours
-
-
-def test_end_priority_matches_live_library():
-    """The frozen _END_PRIORITY order must predict every observable
-    cell of the pairwise closes-through matrix."""
-    _lib_or_skip()
-    from tools.derive_autoclose import check_priorities
-    assert check_priorities() == 0
-
-
 def test_fuzz_differential():
     """Seeded random malformed documents parse+serialize identically
-    through dom.py/htmlser and libxml2."""
+    through the dom walk/htmlser and libxml2."""
     _lib_or_skip()
     from tools.html_fuzz import run
     assert run(400, seed=20260820, verbose=False) == 0
@@ -179,55 +160,25 @@ def test_entity_goldens_against_live_library():
         assert serialize_subtree(html, "body") == want, html
 
 
-def test_entity_table_matches_live_library():
-    """Every name the library resolves, with the same value — and no
-    extras — over the full HTML5 candidate namespace."""
-    _lib_or_skip()
-    from html.entities import html5
-    from ragflow_spark.extractlib.dom import HTML4_ENTITIES
-    from tools.libxml_oracle import serialize_subtree
-    names = sorted({n[:-1] for n in html5 if n.endswith(";")})
-    derived = {}
-    step = 150
-    for i in range(0, len(names), step):
-        batch = names[i:i + step]
-        body = "".join(f"<p>[&{n};]</p>" for n in batch)
-        out = serialize_subtree(f"<html><body>{body}</body></html>",
-                                "body")
-        segs = [s[len("<p>"):] for s in
-                out[len("<body>"):-len("</body>")].split("</p>") if s]
-        assert len(segs) == len(batch)
-        for n, seg in zip(batch, segs):
-            inner = seg[1:-1]
-            if inner != f"&amp;{n};":
-                derived[n] = (inner.replace("&amp;", "&")
-                              .replace("&lt;", "<").replace("&gt;", ">"))
-    assert derived == HTML4_ENTITIES
+SENTINEL_DOC = "<html><body><p>ab\ue000z&amp;c&copy</p></body></html>"
 
 
 def test_sentinel_collision_fallback():
-    # input already containing U+E000 parses via the legacy
-    # convert_charrefs path: the PUA char survives untouched (never
-    # turned into '&') while references resolve HTML5-style there
-    root = parse_html(
-        "<html><body><p>ab\ue000z&amp;c&copy</p></body></html>")
-    p = find_first(root, "p")
-    assert p.text == "ab\ue000z&c\xa9"
+    # a private-use U+E000 in the input is ordinary text, and an
+    # unterminated named reference stays literal
+    p = find_first(parse_html(SENTINEL_DOC), "p")
+    assert p.text == "ab\ue000z&c&copy"
 
 
-def test_priority_sanity():
-    # the derived order the goldens rely on
-    assert _END_PRIORITY["div"] < _END_PRIORITY["td"]
-    assert _END_PRIORITY["td"] == _END_PRIORITY["th"]
-    assert _END_PRIORITY["td"] < _END_PRIORITY["tr"]
-    assert _END_PRIORITY["tr"] < _END_PRIORITY["thead"]
-    assert _END_PRIORITY["thead"] == _END_PRIORITY["tbody"]
-    assert _END_PRIORITY["thead"] < _END_PRIORITY["table"]
+def test_sentinel_collision_against_live_library():
+    _lib_or_skip()
+    from tools.libxml_oracle import serialize_subtree
+    assert serialize_subtree(SENTINEL_DOC, "p") == \
+        "<p>ab\ue000z&amp;c&amp;copy</p>"
 
 
 # (tag snippet, libxml2 body dump) — htmlParseStartTag attribute
-# mechanics, re-parsed from the raw tag text by _parse_attrs_libxml
-# (stdlib html.parser's tolerant scan diverges on every one of these)
+# mechanics
 ATTR_GOLDENS = [
     # junk token skips to the NEXT BLANK; junk in the name keeps attrs
     ('<b]] x="1">t</b>', '<b x="1">t</b>'),
@@ -288,6 +239,37 @@ def test_attr_goldens_against_live_library():
     for html, want in ATTR_GOLDENS:
         doc = f"<html><head><title>t</title></head><body>{html}</body></html>"
         assert serialize_subtree(doc, "body") == f"<body>{want}</body>", html
+
+
+_INVALID_CHAR_RE = re.compile("[\x00-\x08\x0b\x0c\x0e-\x1f\ufffe\uffff]")
+
+
+def test_invalid_char_attribute_values_match_xmlgetprop():
+    """Attribute values are the tree's (what lxml's get() reads): the
+    invalid characters libxml2 keeps there stay, although its dump
+    drops them.  Every invalid-character cell of the fuzz's attribute
+    tables, compared with xmlGetProp."""
+    _lib_or_skip()
+    from tools.html_fuzz import ATTR_JUNK, ATTR_VALS
+    from tools.libxml_oracle import attribute_values
+    junk = [j for j in ATTR_JUNK if _INVALID_CHAR_RE.search(j)]
+    vals = [v for v in ATTR_VALS if _INVALID_CHAR_RE.search(v)]
+    assert junk and vals
+    docs = [f"<p{j}>t</p>" for j in junk]
+    docs += [f'<p {n}="{v}">t</p>' for v in vals
+             for n in ("class", "id", "href", "src")]
+    for doc in docs:
+        got = find_first(parse_html(doc), "p").attrib
+        assert got == attribute_values(doc, "p"), repr(doc)
+    assert find_first(parse_html('<p class="a\x0cb">'), "p").get(
+        "class") == "a\x0cb"
+
+
+def test_libxml2_version_guard():
+    from ragflow_spark.extractlib.dom import check_libxml2_version
+    check_libxml2_version("20914")
+    with pytest.raises(ImportError, match=r"2\.9\.14"):
+        check_libxml2_version("21000")
 
 
 # (body snippet, libxml2 body dump with comment NODES stripped) —

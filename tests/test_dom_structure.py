@@ -1,4 +1,4 @@
-"""Implied document structure: dom.py vs libxml2 (what lxml.html,
+"""Implied document structure: the dom walk vs libxml2 (what lxml.html,
 and therefore readability-lxml, actually builds for shell-less or
 malformed documents).
 
@@ -19,8 +19,8 @@ discard machinery, derived from the system library 2.9.14 by probe:
     document level — EXCEPT a blank flush cut short by a character
     reference, which is never ignorable and opens the implied p.
 
-Three layers: frozen goldens, a live-library cross-check of every
-golden, and a live re-derivation of the head-closer relation.
+Two layers: frozen goldens and a live-library cross-check of every
+golden.
 """
 
 from __future__ import annotations
@@ -29,8 +29,7 @@ import re
 
 import pytest
 
-from ragflow_spark.extractlib.dom import (_HEAD_CLOSERS, find_first,
-                                          get_body, parse_html)
+from ragflow_spark.extractlib.dom import find_first, get_body, parse_html
 from ragflow_spark.extractlib.htmlser import serialize_html
 
 
@@ -223,33 +222,6 @@ def test_structure_goldens_against_live_library():
         assert serialize_root(html) == want, html
 
 
-def test_head_closers_match_live_library():
-    """Re-derive the htmlStartClose-against-head relation from the
-    shared library and compare with the frozen _HEAD_CLOSERS."""
-    _lib_or_skip()
-    from tools.libxml_oracle import serialize_root
-    VOID = {"area", "base", "basefont", "br", "col", "embed", "frame",
-            "hr", "img", "input", "isindex", "link", "meta", "param",
-            "source", "track", "wbr"}
-    universe = sorted(_HEAD_CLOSERS | {
-        "applet", "article", "aside", "base", "basefont", "bgsound",
-        "button", "caption", "colgroup", "del", "figure", "frame",
-        "input", "ins", "isindex", "label", "legend", "link", "main",
-        "meta", "nav", "noframes", "noscript", "object", "optgroup",
-        "option", "script", "section", "select", "style", "tbody",
-        "td", "textarea", "tfoot", "th", "thead", "title", "tr"})
-    derived = set()
-    for t in universe:
-        endt = "" if t in VOID else f"</{t}>"
-        doc = f"<html><head><{t}>x{endt}</head><body>z</body></html>"
-        out = serialize_root(doc)
-        hd = (out.split("</head>")[0] if "</head>" in out
-              else out.split("<body")[0])
-        if f"<{t}" not in hd:
-            derived.add(t)
-    assert derived == set(_HEAD_CLOSERS)
-
-
 def test_fragment_fuzz_differential():
     """Seeded shell-less fragments parse into the same implied
     structure as libxml2 (full root dump, comments stripped)."""
@@ -269,9 +241,8 @@ def test_get_body_on_fragments():
 # with more than 256 open elements is FATAL — the parser stops and the
 # document tail is dropped.  The check runs after the auto-close pops
 # and before the append; discarded html/head/body duplicates and stray
-# end tags at max depth do not abort.  Derived live (dom.py
-# _depth_stop); these cases are also cross-checked against the shared
-# library below.
+# end tags at max depth do not abort.  Derived live; these cases are
+# also cross-checked against the shared library below.
 
 def _depth_cases():
     sp = "<span>"
@@ -481,7 +452,7 @@ def test_doctype_goldens(html, want):
 def test_doctype_goldens_against_live_library():
     _lib_or_skip()
     from tools.libxml_oracle import serialize_root
-    # libxml2 keeps comment nodes; dom.py drops them at parse time
+    # libxml2 keeps comment nodes; the dom walk drops them
     strip = re.compile(r"<!--.*?--!?>", re.S)
     for html, want in DOCTYPE_GOLDENS:
         assert strip.sub("", serialize_root(html)) == want, html

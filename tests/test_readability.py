@@ -278,7 +278,7 @@ def test_score_node_list_and_header_penalties():
 def test_link_density_of_anchor_counts_descendants_only():
     # lxml findall('.//a') is descendants-only: an <a> candidate's own
     # text is not link text, only nested anchors count.  A bare a-in-a
-    # cannot nest (libxml2's a-closes-a start rule, AUTO_CLOSE_PAIRS),
+    # cannot nest (libxml2's a-closes-a htmlStartClose rule),
     # so the descendant anchor sits behind a <span> — verified against
     # the shared library to keep this exact tree shape.
     from ragflow_spark.extractlib.dom import find_first

@@ -1,31 +1,22 @@
-"""Randomized malformed-HTML differential: dom.py + htmlser vs libxml2.
+"""Randomized malformed-HTML differential: dom walk + htmlser vs libxml2.
 
 Generates random token streams (start tags, stray/mismatched end tags,
 XML self-closing syntax, text with entities, duplicate/minimized/URI
-attributes) wrapped in an <html><head><title>t</title></head><body>
-shell, parses each document with BOTH the from-scratch DOM
-(ragflow_spark.extractlib.dom) and the system libxml2 (the parser
-lxml.html / readability-lxml actually uses), serializes the <body>
-subtree from each, and reports divergences.
+attributes, tokenizer and structural junk, NUL and invalid characters)
+wrapped in an <html><head><title>t</title></head><body> shell, plus
+shell-less fragments and documents at libxml2's depth cap.  Each
+document is parsed once through ``dom.parse_html`` (libxml2's parser,
+copied into ``dom.Node`` trees) and serialized with
+``htmlser.serialize_html``; the result must equal libxml2's own
+``htmlNodeDumpFormatOutput`` of the root element.  The check covers
+the tree walk (text/tail assembly, attribute values, MINIMIZED) and
+every serializer rule.
 
-Tokenizer-level junk IS generated (bare '<' in text, malformed
-start/end-tag syntax, attribute junk, comment-close variants) — dom.py
-pins libxml2's recovery for all of it.  WELL-FORMED comment nodes are
-generated too; since dom.py drops comments at parse time (the
-pipeline's Cleaner and the serialized-length retry both strip them),
-the libxml2 dump has its comment nodes stripped before comparison.
-
-Deliberately NOT generated (documented parse-time divergences):
-  * UNTERMINATED comments — both sides swallow to EOF (pinned by
-    goldens); generating them would blank most of the document;
-  * PIs — libxml2 keeps PI nodes in its serialization while dom.py
-    drops them at parse time; their text contribution is zero and the
-    pipeline's Cleaner removes them, so extraction is equivalent
-    (goldens pin the consumed span).  DOCTYPES *are* generated
-    (STRUCT_JUNK): both sides drop the node, and the misplaced-doctype
-    quirk + reopen suppression are modeled in dom.py;
-  * raw-text elements as containers (script/style/title/textarea) —
-    their content models are pinned by explicit goldens instead.
+The walk drops comment and PI nodes where the library's dump keeps
+them (the pipeline's Cleaner removes them before anything reads the
+tree), so comment nodes are stripped from the library's dump before
+comparing, and PIs are not generated.  Unterminated comments are not
+generated either: they swallow the rest of the document.
 
 Usage: python tools/html_fuzz.py [N] [SEED]
 Exit 0 when all N documents match, 1 otherwise (first 10 diffs shown).
@@ -39,7 +30,7 @@ import sys
 
 from ragflow_spark.extractlib.dom import find_first, parse_html
 from ragflow_spark.extractlib.htmlser import serialize_html
-from tools.libxml_oracle import load_libxml2, serialize_subtree
+from tools.libxml_oracle import serialize_root
 
 TAGS = [
     "a", "abbr", "address", "b", "big", "blockquote", "caption",
@@ -58,24 +49,26 @@ VOIDS = ["br", "hr", "img", "input"]
 WORDS = ["alpha", "beta", "gamma", "delta", "text", "word", "x", "y",
          "page", "link", "item", "entry", "note", "&amp;", "&lt;a&gt;",
          "café", "文档",
-         # entity-resolution junk (libxml2 semantics pinned in dom.py)
+         # entity-resolution junk
          "&amp", "&copy;", "&copy", "&COPY;", "&unknown;", "&dollar;",
          "&#65", "&#x41;", "&#X41", "&#0;", "&#xD800;", "&#1114112;",
          "&#151;", "&#abc", "&#x;", "&#", "&;", "&", "&lang;", "&nGt;",
          "a&&b", "&#9;tab",
-         # NUL / invalid-char handling (dom.py parse_html + NUL rules):
-         # run-initial NUL ends the input, mid-run NUL -> space,
-         # C0-minus-tab/LF/CR and U+FFFE/FFFF are deleted everywhere
+         # NUL / invalid-char handling: run-initial NUL ends the
+         # input, mid-run NUL -> space, C0-minus-tab/LF/CR and
+         # U+FFFE/FFFF are deleted from character data
          "a\x00b", "\x00dropped", "v\x0bt", "f\x0cf.", "e\x01\x1fe",
          "n\ufffen"]
 ATTR_NAMES = ["class", "id", "title", "data-x", "href", "src", "name",
               "checked", "align", "width"]
 ATTR_VALS = ["main", "x y", 'say "hi"', "it's", "a&b", "http://e.com/a b",
              "", "1", "café", "&copy;", "&copy=3", "&#65", "&amp",
-             "&unknown;", "&#0;q", "x?a=1&b=2"]
-# raw attribute-area junk (libxml2's htmlParseStartTag mechanics pinned
-# by _parse_attrs_libxml: skip-to-blank on bad names, unquoted values
-# eating quotes/slashes, blanks around '=', first-duplicate-wins)
+             "&unknown;", "&#0;q", "x?a=1&b=2",
+             # invalid characters: kept in the tree, dropped by the dump
+             "a\x0cb", "\x0b", "q\ufffer"]
+# raw attribute-area junk (libxml2's htmlParseStartTag mechanics:
+# skip-to-blank on bad names, unquoted values eating quotes/slashes,
+# blanks around '=', first-duplicate-wins)
 ATTR_JUNK = [' ]]x="1"', ']] x="1"', ' x=a"b', ' x = "1"', " x=",
              ' x="1"y="2"', " x:y=1", " _x=1", " :y=2", " x=1 x=2",
              " X=1", " /junk x=1", " x=1/", ' "junk"', " @foo=1",
@@ -87,7 +80,7 @@ RAW_CONTAINERS = ["script", "style", "textarea", "title"]
 RAW_CONTENT = ["var a = 1;", "if (a<b && c>d) {}", ".x > .y { }",
                "a &amp; b &#65; &copy; &copy plain", "<p>not a tag</p>"]
 # tokenizer-level junk: bare '<', '<!' oddballs, malformed end tags,
-# and comment-close variants (libxml2 recovery pinned in dom.py)
+# and comment-close variants
 TOKEN_JUNK = ["a < b", "a <3 b", "a <$x b", "a <<b>x</b>", "a <&copy; b",
               "x <!", "x <!junk>y", "x <!->y", "<![if !IE]>z<![endif]>",
               "</ p> b", "</> b", "</3> b", "</$> b", "</_q>x", "</.q>x",
@@ -95,8 +88,8 @@ TOKEN_JUNK = ["a < b", "a <3 b", "a <$x b", "a <<b>x</b>", "a <&copy; b",
               "<!-- a --->y", "<!--a--b-->y", "<!-- a --!y -->z",
               "<!-- c --!>y", "x<!doctype html>y",
               "a<p\x00 q>b", "a</p\x00>b", "<td\x00>z", "a</\x0cp>b"]
-# libxml2 serializes kept comment nodes; dom.py drops them at parse
-# time — strip them from the libxml2 dump before comparing
+# libxml2 serializes kept comment nodes; the dom walk drops them —
+# strip them from the libxml2 dump before comparing
 _COMMENT_NODE_RE = re.compile(r"<!--.*?--!?>", re.S)
 
 
@@ -188,7 +181,7 @@ STRUCT_JUNK = ["</head>", "</body>", "<body>", '<body class="z">',
                "<html>dup", "</html>", "<html lang=\"x\">",
                # misplaced doctypes: the one-shot literalization quirk
                # on the next '</'/'<!' construct, and the reopen
-               # suppression after the root closes (dom.py); a comment
+               # suppression after the root closes; a comment
                # between the doctype and the end tag disarms the quirk
                "<!doctype html>", "<!DOCTYPE html>", "<!doctypejunk>",
                "<!doctype html><!-- c --></p>b"]
@@ -259,7 +252,6 @@ def _check(doc: str) -> tuple:
     # full-root comparison for every kind: shelled documents can carry
     # structural junk that restructures above (or duplicates) <body>,
     # so a body-subtree compare would miss divergences there
-    from tools.libxml_oracle import serialize_root
     lx = _COMMENT_NODE_RE.sub("", serialize_root(doc))
     root = parse_html(doc)
     ours = "".join(serialize_html(ch) for ch in root.children)
@@ -295,9 +287,6 @@ def run(n: int, seed: int, verbose: bool = True,
 
 
 if __name__ == "__main__":
-    if load_libxml2() is None:
-        print("libxml2 shared library not available", file=sys.stderr)
-        raise SystemExit(1)
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
     seed = int(sys.argv[2]) if len(sys.argv) > 2 else 42
     raise SystemExit(1 if run(n, seed, fragments=True) else 0)

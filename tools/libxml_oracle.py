@@ -1,64 +1,41 @@
-"""ctypes bridge to the system libxml2 — the golden source for HTML
-serialization semantics.
+"""libxml2's own HTML dumps and attribute reads — the golden source for
+the HTML serializer and the reference for the DOM walk.
 
 ``readability-lxml==0.8.1`` (reference pin, pyproject.toml:84) computes
 its retry-length over ``tounicode(node, method="html")``, which lxml
 implements by calling libxml2's ``htmlNodeDumpFormatOutput``.  The
-sandbox has no lxml, but it DOES ship libxml2 2.9.14
-(/usr/lib/x86_64-linux-gnu/libxml2.so.2) — the same library lxml would
-link.  This module drives it through ctypes so the from-scratch
-serializer in ``ragflow_spark/extractlib/htmlser.py`` can be pinned
-against the real thing:
+pipeline parses with the system libxml2 2.9.14 through
+``ragflow_spark.extractlib.dom`` (the same library lxml links); this
+module adds the dump functions to that binding so the serializer in
+``ragflow_spark/extractlib/htmlser.py`` and the tree walk in ``dom``
+can be pinned against the library itself:
 
-  * ``serialize_subtree(html, xpath_tag)`` — parse an HTML document with
-    libxml2's HTML parser and dump one element subtree exactly as
+  * ``serialize_subtree(html, tag)`` — parse an HTML document and dump
+    the first element named ``tag`` exactly as
     ``lxml.etree.tounicode(el, method="html")`` would (element + its
-    tail, format=0, UTF-8).
-  * ``probe_empty_tags()`` / ``probe_boolean_attrs()`` — enumerate the
-    library's own element/attribute tables by observation.
+    tail, format=0, UTF-8);
+  * ``serialize_root(html)`` — dump the document's root element;
+  * ``attribute_values(html, tag)`` — ``xmlGetProp`` for every
+    attribute of the first element named ``tag`` (what lxml's ``get``
+    returns).
 
-Test-authoring and differential-test harness only: the production
-pipeline never imports this module (no ctypes in the hot path).
+Test-authoring and differential-test harness only.
 """
 
 from __future__ import annotations
 
 import ctypes
-import ctypes.util
-from typing import Optional
 
-_LIB_CANDIDATES = (
-    "/usr/lib/x86_64-linux-gnu/libxml2.so.2",
-    "libxml2.so.2",
-)
+from ragflow_spark.extractlib.dom import (HTML_PARSE_OPTIONS, LIBXML2,
+                                          read_node)
 
-
-def load_libxml2() -> Optional[ctypes.CDLL]:
-    for cand in _LIB_CANDIDATES:
-        try:
-            lib = ctypes.CDLL(cand)
-        except OSError:
-            continue
-        _bind(lib)
-        return lib
-    found = ctypes.util.find_library("xml2")
-    if found:
-        lib = ctypes.CDLL(found)
-        _bind(lib)
-        return lib
-    return None
+_ELEMENT = 1
 
 
 def _bind(lib: ctypes.CDLL) -> None:
-    lib.htmlReadMemory.restype = ctypes.c_void_p
-    lib.htmlReadMemory.argtypes = [
-        ctypes.c_char_p, ctypes.c_int, ctypes.c_char_p, ctypes.c_char_p,
-        ctypes.c_int,
-    ]
-    lib.xmlDocGetRootElement.restype = ctypes.c_void_p
-    lib.xmlDocGetRootElement.argtypes = [ctypes.c_void_p]
     lib.xmlAllocOutputBuffer.restype = ctypes.c_void_p
     lib.xmlAllocOutputBuffer.argtypes = [ctypes.c_void_p]
+    lib.htmlNodeDumpFormatOutput.restype = None
     lib.htmlNodeDumpFormatOutput.argtypes = [
         ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p, ctypes.c_char_p,
         ctypes.c_int,
@@ -67,49 +44,40 @@ def _bind(lib: ctypes.CDLL) -> None:
     lib.xmlOutputBufferGetContent.argtypes = [ctypes.c_void_p]
     lib.xmlOutputBufferGetSize.restype = ctypes.c_size_t
     lib.xmlOutputBufferGetSize.argtypes = [ctypes.c_void_p]
+    lib.xmlOutputBufferClose.restype = ctypes.c_int
     lib.xmlOutputBufferClose.argtypes = [ctypes.c_void_p]
-    lib.xmlFreeDoc.argtypes = [ctypes.c_void_p]
+    lib.xmlGetProp.restype = ctypes.c_void_p
+    lib.xmlGetProp.argtypes = [ctypes.c_void_p, ctypes.c_char_p]
 
 
-# struct xmlNode offsets (x86-64): void*_private; int type; char* name;
-# children; last; parent; next; prev; doc; ...
-_OFF_TYPE = 8
-_OFF_NAME = 16
-_OFF_CHILDREN = 24
-_OFF_NEXT = 48
-_OFF_PROPERTIES = 88  # element: properties pointer (after doc, ns, content)
-
-XML_ELEMENT_NODE = 1
-
-# htmlReadMemory options: RECOVER=1, NOERROR=32, NOWARNING=64
-_HTML_PARSE_OPTS = 1 | 32 | 64
+_bind(LIBXML2)
+# xmlFree is a global function pointer, not an exported function
+_xml_free = ctypes.CFUNCTYPE(None, ctypes.c_void_p).in_dll(LIBXML2,
+                                                            "xmlFree")
 
 
-def _ptr(addr: int, off: int) -> int:
-    return ctypes.cast(addr + off, ctypes.POINTER(ctypes.c_void_p))[0] or 0
+def load_libxml2() -> ctypes.CDLL:
+    """The pipeline's libxml2, with the dump functions bound."""
+    return LIBXML2
 
 
-def _node_type(addr: int) -> int:
-    return ctypes.cast(addr + _OFF_TYPE, ctypes.POINTER(ctypes.c_int))[0]
-
-
-def _node_name(addr: int) -> str:
-    p = _ptr(addr, _OFF_NAME)
-    return ctypes.cast(p, ctypes.c_char_p).value.decode() if p else ""
+def _name(addr: int) -> str:
+    p = read_node(addr)[1]
+    return ctypes.string_at(p).decode() if p else ""
 
 
 def _find_element(addr: int, tag: str) -> int:
     """Depth-first search for the first element named ``tag``."""
     if not addr:
         return 0
-    if _node_type(addr) == XML_ELEMENT_NODE and _node_name(addr) == tag:
+    typ, _, child, _, _, _ = read_node(addr)
+    if typ == _ELEMENT and _name(addr) == tag:
         return addr
-    child = _ptr(addr, _OFF_CHILDREN)
     while child:
         hit = _find_element(child, tag)
         if hit:
             return hit
-        child = _ptr(child, _OFF_NEXT)
+        child = read_node(child)[3]
     return 0
 
 
@@ -120,7 +88,7 @@ class LibxmlHtml:
         self.lib = lib
         raw = html.encode("utf-8")
         self.doc = lib.htmlReadMemory(raw, len(raw), b"test.html",
-                                      b"utf-8", _HTML_PARSE_OPTS)
+                                      b"utf-8", HTML_PARSE_OPTIONS)
         if not self.doc:
             raise ValueError("htmlReadMemory failed")
 
@@ -129,20 +97,39 @@ class LibxmlHtml:
             self.lib.xmlFreeDoc(self.doc)
             self.doc = 0
 
+    def element(self, tag: str) -> int:
+        el = _find_element(self.lib.xmlDocGetRootElement(self.doc), tag)
+        if not el:
+            raise KeyError(tag)
+        return el
+
     def dump_element(self, tag: str, with_tail: bool = True) -> str:
         """Serialize the first element named ``tag`` the way
         ``lxml.etree.tounicode(el, method="html")`` does: the node dump,
         plus (with_tail) the text node(s) that follow it."""
-        root = self.lib.xmlDocGetRootElement(self.doc)
-        el = _find_element(root, tag)
-        if not el:
-            raise KeyError(tag)
+        el = self.element(tag)
         out = self._dump_node(el)
         if with_tail:
-            sib = _ptr(el, _OFF_NEXT)
-            while sib and _node_type(sib) in (3, 4):  # text / cdata
+            sib = read_node(el)[3]
+            while sib and read_node(sib)[0] in (3, 4):  # text / cdata
                 out += self._dump_node(sib)
-                sib = _ptr(sib, _OFF_NEXT)
+                sib = read_node(sib)[3]
+        return out
+
+    def attribute_values(self, tag: str) -> dict:
+        el = self.element(tag)
+        out = {}
+        prop = read_node(el)[5]
+        while prop:
+            name = _name(prop)
+            value = self.lib.xmlGetProp(el, name.encode())
+            try:
+                out[name] = (ctypes.string_at(value).decode()
+                             if value else None)
+            finally:
+                if value:
+                    _xml_free(value)
+            prop = read_node(prop)[3]
         return out
 
     def _dump_node(self, node_addr: int) -> str:
@@ -161,10 +148,7 @@ class LibxmlHtml:
 
 
 def serialize_subtree(html: str, tag: str, with_tail: bool = True) -> str:
-    lib = load_libxml2()
-    if lib is None:
-        raise RuntimeError("libxml2 not available")
-    d = LibxmlHtml(lib, html)
+    d = LibxmlHtml(LIBXML2, html)
     try:
         return d.dump_element(tag, with_tail=with_tail)
     finally:
@@ -174,15 +158,22 @@ def serialize_subtree(html: str, tag: str, with_tail: bool = True) -> str:
 def serialize_root(html: str) -> str:
     """Dump the document's ROOT element (usually the implied ``html``)
     — observes libxml2's implied html/head/body construction."""
-    lib = load_libxml2()
-    if lib is None:
-        raise RuntimeError("libxml2 not available")
-    d = LibxmlHtml(lib, html)
+    d = LibxmlHtml(LIBXML2, html)
     try:
-        root = lib.xmlDocGetRootElement(d.doc)
+        root = LIBXML2.xmlDocGetRootElement(d.doc)
         if not root:
             return ""
         return d._dump_node(root)
+    finally:
+        d.close()
+
+
+def attribute_values(html: str, tag: str) -> dict:
+    """``{name: xmlGetProp(el, name)}`` over the attributes of the first
+    element named ``tag`` (``None`` where the property has no value)."""
+    d = LibxmlHtml(LIBXML2, html)
+    try:
+        return d.attribute_values(tag)
     finally:
         d.close()
 
