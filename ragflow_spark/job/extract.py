@@ -15,10 +15,12 @@ Physical plan shape (SURVEY.md §4.2):
 
     Scan parquet/iceberg (url, html[, lang])   <- column pruning: only the
       -> [optional salted Repartition]            columns the UDF declares
-      -> MapInPandas(_extract_batches)         <- the one parse per document
-      -> persist                               <- run_job: one pass per wave
-           -> drop sections       -> extracted/
-           -> MapInPandas(chunk)  -> chunks/      (sections in, no parse)
+      -> MapInPandas(_extract_batches)         <- the one Python pass: parse
+           (url, html, template literal)          and chunk each document
+      -> persist                               <- run_job: one frame per wave
+           -> drop chunks              -> extracted/
+           -> select url, inline(chunks) -> chunks/   (no second pass)
+           -> groupBy bucket agg       -> lineage metrics (one collect)
 
 The extraction is embarrassingly parallel: no shuffle is required at all
 unless the caller wants host-salted balancing (job/salting.py) — at 100 TB
@@ -32,24 +34,21 @@ from functools import partial
 from typing import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 EXTRACTED_SCHEMA = ("url string, title string, extracted_text string, "
                     "n_sections int, parser string")
 
-# The extract pass: the extracted row plus its parse's sections for the
-# chunkers. PDF rows carry pdf_to_sections' tagged texts and layout
-# types; HTML rows leave both null, their sections being the lines of
-# extracted_text (htmlparse.html_sections).
-SECTION_COLUMNS = ("sections", "layouts")
-PARSED_SCHEMA = (EXTRACTED_SCHEMA
-                 + ", sections array<string>, layouts array<string>")
+# One chunk row of a document; ``merge_mode`` is dropped after the
+# inline unless the template is book. Struct fields are joined without
+# spaces so that the top-level schema still splits on ", ".
+CHUNK_FIELDS = ("chunk_seq:int,chunk_text:string,chunk_id:string,"
+                "span_start:long,span_end:long,page_nums:array<int>,"
+                "merge_mode:string")
 
-CHUNKS_SCHEMA = ("url string, chunk_seq int, chunk_text string, "
-                 "chunk_id string, span_start long, span_end long, "
-                 "page_nums array<int>")
-
-BOOK_CHUNKS_SCHEMA = CHUNKS_SCHEMA + ", merge_mode string"
+# The single pass: the extracted row plus the document's chunk rows
+# (empty when no template is given).
+DOCUMENT_SCHEMA = EXTRACTED_SCHEMA + f", chunks array<struct<{CHUNK_FIELDS}>>"
 
 TABLES_SCHEMA = "url string, kind string, seq int, content string"
 
@@ -80,7 +79,10 @@ def map_documents(df: DataFrame, doc_fn: Callable, schema: str) -> DataFrame:
     return df.mapInPandas(batches, schema=schema)
 
 
-def _parse_document(url: str, blob: bytes) -> list[tuple]:
+def _extract_document(url: str, blob: bytes, template: str | None
+                      ) -> list[tuple]:
+    """The extracted row of one document from one parse, with its chunk
+    rows for ``template`` (none without a template)."""
     # imports inside the worker so the UDF pickles by reference cleanly
     from ragflow_spark.extractlib.codec import decode_blob
     from ragflow_spark.extractlib.htmlparse import parse_html_text
@@ -91,31 +93,37 @@ def _parse_document(url: str, blob: bytes) -> list[tuple]:
     # only bytes
     if blob.startswith(b"%PDF-"):
         title, text, n, sections = extract_pdf_text(blob)
-        return [(url, title, text, n, "pdf", [t for t, _ in sections],
-                 [layout for _, layout in sections])]
-    title, content = parse_html_text(decode_blob(blob))
-    text = f"{title}\n{content}"
-    n = len([s for s in text.split("\n") if s])
-    return [(url, title, text, n, "html", None, None)]
+        parser = "pdf"
+    else:
+        title, content = parse_html_text(decode_blob(blob))
+        text = f"{title}\n{content}"
+        n = len([s for s in text.split("\n") if s])
+        # HTML sections are the lines of extracted_text
+        parser, sections = "html", None
+    chunks = (_chunk_rows(template, url, parser, text, sections)
+              if template else [])
+    return [(url, title, text, n, parser, chunks)]
 
 
 def _extract_batches(frames: Iterator[pd.DataFrame]
                      ) -> Iterator[pd.DataFrame]:
-    return _map_documents(frames, _parse_document, PARSED_SCHEMA)
+    return _map_documents(frames, _extract_document, DOCUMENT_SCHEMA)
 
 
-def parse_pages(pages: DataFrame) -> DataFrame:
-    """pages(url, html, ...) -> the extract pass: the extract_pages row
-    plus ``SECTION_COLUMNS``, all that a chunker needs."""
-    return pages.select("url", "html").mapInPandas(
-        _extract_batches, schema=PARSED_SCHEMA
-    )
+def extract_documents(pages: DataFrame,
+                      template: str | None = None) -> DataFrame:
+    """pages(url, html, ...) -> one ``DOCUMENT_SCHEMA`` row per document,
+    parsed and chunked in one pass. The template travels as a literal
+    column, so the UDF is the module-level ``_extract_batches`` itself."""
+    return pages.select(
+        "url", "html", F.lit(template).cast("string").alias("template")
+    ).mapInPandas(_extract_batches, schema=DOCUMENT_SCHEMA)
 
 
 def extract_pages(pages: DataFrame) -> DataFrame:
     """pages(url, html, ...) -> (url, title, extracted_text, n_sections,
     parser). The byte-identity invariant binds extracted_text per url."""
-    return parse_pages(pages).drop(*SECTION_COLUMNS)
+    return extract_documents(pages).drop("chunks")
 
 
 def _table_rows(html: bool, url: str, blob: bytes) -> list[tuple]:
@@ -192,24 +200,23 @@ def chunk_office(pages: DataFrame) -> DataFrame:
                          OFFICE_SCHEMA)
 
 
-def _template_chunks(template: str, parser: str, text: str, sections,
-                     layouts) -> tuple[list[str], str]:
+def _template_chunks(template: str, parser: str, text: str, sections
+                     ) -> tuple[list[str], str]:
     """(raw chunks, merge_mode) of one parsed document; raw chunks keep
     the @@..## position tags where the path produces them."""
     from ragflow_spark.extractlib import templates as T
 
     if parser == "pdf":
-        pairs = list(zip(sections, layouts))
         if template == "naive":
-            return T.naive_pdf(pairs, keep_tags=True), "naive"
+            return T.naive_pdf(sections, keep_tags=True), "naive"
         if template == "book":
-            return T.naive_pdf(pairs, 256, keep_tags=True), "naive"
+            return T.naive_pdf(sections, 256, keep_tags=True), "naive"
         if template == "paper":
-            return T.paper_pdf(pairs, keep_tags=True), "paper"
+            return T.paper_pdf(sections, keep_tags=True), "paper"
         if template == "one":
             # the one chunk is the whole extracted text
             return T.one([text]), "one"
-        return T.laws_pdf(pairs), "laws"
+        return T.laws_pdf(sections), "laws"
     if template == "paper":
         # reference paper.chunk supports pdf only
         # (rag/app/paper.py:160-162): non-pdf rows yield no chunks
@@ -224,12 +231,15 @@ def _template_chunks(template: str, parser: str, text: str, sections,
     return T.laws_html(lines), "laws"
 
 
-def _chunk_document(template: str, url: str, parser: str, text: str,
-                    sections, layouts) -> list[tuple]:
+def _chunk_rows(template: str, url: str, parser: str, text: str,
+                sections) -> list[tuple]:
+    """The chunk structs (``CHUNK_FIELDS`` order) of one document.
+    chunk_seq is assigned here, per url, so no window function or
+    global sort is needed (SURVEY.md §2.9)."""
     from ragflow_spark.extractlib.templates import chunks_with_ids
     from ragflow_spark.extractlib.pdfrules import parse_positions
 
-    raw, mode = _template_chunks(template, parser, text, sections, layouts)
+    raw, mode = _template_chunks(template, parser, text, sections)
     # chunk spans: character offsets into the concatenated chunk stream
     # of this url (the north rule's span output); PDF chunks additionally
     # carry page numbers parsed from the position tags
@@ -239,8 +249,8 @@ def _chunk_document(template: str, url: str, parser: str, text: str,
     for seq, chunk, cid in chunks_with_ids(raw, url):
         pages = sorted({p for pos in parse_positions(raw[seq])
                         for p in pos[0]})
-        row = (url, seq, chunk, cid, offset, offset + len(chunk), pages)
-        rows.append(row + (mode,) if template == "book" else row)
+        rows.append((seq, chunk, cid, offset, offset + len(chunk), pages,
+                     mode))
         offset += len(chunk)
     return rows
 
@@ -252,19 +262,14 @@ def check_template(template: str) -> None:
                          f"of {', '.join(TEMPLATES)}")
 
 
-def chunk_parsed(parsed: DataFrame, template: str) -> DataFrame:
-    """parse_pages rows -> exploded chunk rows for one template chunker,
-    without parsing again.
-
-    chunk_seq is assigned inside the UDF (per-url order carried by the
-    column, no window function / global sort needed — SURVEY.md §2.9)."""
-    check_template(template)
-    schema = BOOK_CHUNKS_SCHEMA if template == "book" else CHUNKS_SCHEMA
-    return map_documents(parsed.select("url", "parser", "extracted_text",
-                                       *SECTION_COLUMNS),
-                         partial(_chunk_document, template), schema)
+def inline_chunks(docs: DataFrame, template: str, *keep: str) -> DataFrame:
+    """extract_documents rows -> one row per chunk: url, the chunk fields
+    (merge_mode only under book) and the ``keep`` columns."""
+    chunks = docs.select("url", F.inline("chunks"), *keep)
+    return chunks if template == "book" else chunks.drop("merge_mode")
 
 
 def chunk_pages(pages: DataFrame, template: str = "naive") -> DataFrame:
     """pages -> exploded chunk rows for one template chunker."""
-    return chunk_parsed(parse_pages(pages), template)
+    check_template(template)
+    return inline_chunks(extract_documents(pages, template), template)

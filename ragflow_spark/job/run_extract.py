@@ -16,14 +16,14 @@ and refuses to import with any other version.
 Execution shape per wave (SURVEY.md §4.2):
 
     Scan(pages) --filter bucket IN wave--> [salted Repartition]
-      -> MapInPandas(extract) -> persist    (one parse per document)
-           -> drop sections    -> range-cluster on (bucket, url)
+      -> MapInPandas(extract) -> persist    (the one Python pass: one
+                                             parse, chunks as an array)
+           -> drop chunks      -> range-cluster on (bucket, url)
                                -> write extracted/ (partitioned by bucket,
                                   dynamic partition overwrite = idempotent)
-           -> MapInPandas(chunk) -> persist
-                               -> range-cluster on (bucket, url)
+           -> inline(chunks)   -> range-cluster on (bucket, url)
                                -> write chunks/   (same)
-      -> per-bucket agg over both persisted frames (the rows just written)
+           -> one per-bucket agg and collect (the rows just written)
       -> unpersist -> append lineage rows (commit point)
 
 The range-cluster step gives each write task a contiguous run of
@@ -31,7 +31,7 @@ The range-cluster step gives each write task a contiguous run of
 files per wave instead of one file per bucket per scan task. Each
 output file has a fixed cost (about 13 ms on a local filesystem), which
 dominates the commit once pages are small. It reads the persisted
-frames, so neither its range sample nor its shuffle re-runs a parser.
+frame, so neither its range sample nor its shuffle re-runs a parser.
 
 Resume: completed (digest, bucket) pairs are loaded from the lineage
 table and filtered out of the scan — no recompute, byte-identical final
@@ -134,16 +134,15 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
         if repartition:
             sub = salted_repartition(sub, num_partitions=repartition,
                                      salt_buckets=salt_buckets)
-        # one parse per document feeds both outputs; bucket is re-derived
-        # from url on the output side (cheaper than threading a
-        # passthrough column through the Arrow UDF)
-        bucket = ck.bucket_col("url", n_buckets)
-        with _persisted(ex.parse_pages(sub)) as parsed, \
-                _persisted(ex.chunk_parsed(parsed, template)
-                           .withColumn("bucket", bucket)) as chunks:
-            extracted = (parsed.drop(*ex.SECTION_COLUMNS)
-                         .withColumn("bucket", bucket))
-            _write_partitioned(_clustered(extracted, "url"), extracted_path)
+        # one Python pass per document feeds every output; bucket is
+        # re-derived from url (cheaper than threading a passthrough
+        # column through the Arrow UDF)
+        docs = (ex.extract_documents(sub, template)
+                .withColumn("bucket", ck.bucket_col("url", n_buckets)))
+        with _persisted(docs) as docs:
+            chunks = ex.inline_chunks(docs, template, "bucket")
+            _write_partitioned(_clustered(docs.drop("chunks"), "url"),
+                               extracted_path)
             _write_partitioned(_clustered(chunks, "url"), chunks_path)
             if index:
                 # search-store rows (build_chunks field assembly,
@@ -165,25 +164,23 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
                 _write_partitioned(idx, f"{output_dir}/index")
             wall_ms = int((time.perf_counter() - t0) * 1000)
 
-            # metrics: Spark aggregates over the persisted rows the
+            # metrics: one Spark aggregate over the persisted rows the
             # writes consumed, so exact under stage retries (unlike
             # accumulators)
-            emet = {r["bucket"]: r for r in
-                    extracted.groupBy("bucket").agg(
-                        F.count("*").alias("n_docs"),
-                        F.sum(F.octet_length("extracted_text"))
-                        .alias("n_bytes")).collect()}
-            cmet = {r["bucket"]: r["n_chunks"] for r in
-                    chunks.groupBy("bucket").agg(
-                        F.count("*").alias("n_chunks")).collect()}
+            met = {r["bucket"]: r for r in
+                   docs.groupBy("bucket").agg(
+                       F.count("*").alias("n_docs"),
+                       F.sum(F.size("chunks")).alias("n_chunks"),
+                       F.sum(F.octet_length("extracted_text"))
+                       .alias("n_bytes")).collect()}
         rows = []
         for b in wave:
-            em = emet.get(b)
+            m = met.get(b)
             rows.append({
                 "run_id": run_id, "digest": digest, "bucket": b,
-                "n_docs": em["n_docs"] if em else 0,
-                "n_chunks": int(cmet.get(b, 0)),
-                "n_bytes": em["n_bytes"] if em else 0,
+                "n_docs": m["n_docs"] if m else 0,
+                "n_chunks": m["n_chunks"] if m else 0,
+                "n_bytes": m["n_bytes"] if m else 0,
                 "wall_ms": wall_ms, "wave": wave_idx, "status": "ok",
             })
         ck.append_lineage(spark, ckpt_path, rows)

@@ -1,6 +1,8 @@
 """Resume guarantee (north rule): kill mid-job, restart, no recompute of
 completed buckets, byte-identical final tables (SURVEY.md §5.2 item 4)."""
 
+import glob
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -118,12 +120,14 @@ def test_lineage_metrics_cover_all_docs(spark, pages_path, tmp_path):
 
 def _committed_counts(spark, out_dir):
     """bucket -> (n_docs, n_chunks, n_bytes) of the files under
-    extracted/ and chunks/."""
+    extracted/ and chunks/; an empty or missing chunks/ counts 0."""
     counts = {}
     for r in spark.read.parquet(f"{out_dir}/extracted").collect():
         n_docs, n_chunks, n_bytes = counts.get(r.bucket, (0, 0, 0))
         counts[r.bucket] = (n_docs + 1, n_chunks,
                             n_bytes + len(r.extracted_text.encode()))
+    if not glob.glob(f"{out_dir}/chunks/bucket=*/part-*"):
+        return counts
     for r in spark.read.parquet(f"{out_dir}/chunks").select(
             "bucket").collect():
         n_docs, n_chunks, n_bytes = counts.get(r.bucket, (0, 0, 0))
@@ -173,6 +177,27 @@ def test_lineage_rows_equal_committed_counts(spark, pages_path, tmp_path,
     run_job(spark, pages_path, out_crash, n_buckets=N_BUCKETS,
             waves=WAVES, run_id="run2")
     _assert_lineage_matches_committed(spark, out_crash)
+
+
+def test_one_python_pass_per_wave(spark, pages_path, tmp_path,
+                                  monkeypatch):
+    """Each wave parses and chunks its documents in one mapInPandas pass
+    and persists one frame, which feeds every table and the metrics."""
+    from ragflow_spark.job.run_extract import run_job
+
+    # the session's concrete DataFrame class overrides the base methods
+    cls = type(spark.range(0))
+    calls = {"mapInPandas": 0, "persist": 0}
+    for name in calls:
+        def counting(self, *args, _real=getattr(cls, name), _name=name,
+                     **kwargs):
+            calls[_name] += 1
+            return _real(self, *args, **kwargs)
+        monkeypatch.setattr(cls, name, counting)
+    summary = run_job(spark, pages_path, str(tmp_path / "out"),
+                      n_buckets=N_BUCKETS, waves=2, index=False)
+    assert summary["waves"] == 2
+    assert calls == {"mapInPandas": 2, "persist": 2}
 
 
 def test_lineage_summary_counts_wave_wall_once(spark, tmp_path):

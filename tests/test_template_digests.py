@@ -8,6 +8,7 @@ import json
 
 import pytest
 from pyspark.sql import functions as F
+from test_checkpoint_resume import _committed_counts
 
 SF = "/root/testdata/sf0.001"
 
@@ -72,3 +73,11 @@ def test_run_job_output_pinned(spark, mixed_pages, tmp_path, template):
            # create_time is index_clock rendered in the local time zone
            _digest(spark, f"{out}/index", drop=("create_time",)))
     assert got == DIGESTS[template]
+    # every lineage row's metrics are those of the committed files,
+    # including documents without chunks (HTML pages under paper)
+    counts = _committed_counts(spark, out)
+    lineage = spark.read.parquet(f"{out}/_checkpoint").collect()
+    assert sorted(r.bucket for r in lineage) == [0, 1, 2, 3]
+    for r in lineage:
+        assert (r.n_docs, r.n_chunks, r.n_bytes) == \
+            counts.get(r.bucket, (0, 0, 0)), r.bucket

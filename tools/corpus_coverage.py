@@ -3,7 +3,7 @@
 The settrace tracer in tools/line_coverage.py cannot see Spark python
 workers, so per-doc extraction code exercised only by the oracle gate
 shows as missed.  This harness re-drives the same per-doc batch
-functions (extract / chunk / office / table paths) over the full
+functions (extract per template / office / table paths) over the full
 sf0.01 synthetic corpus IN-PROCESS under the tracer, unions the hits
 with tools/coverage_lines.json, and re-reports — surviving misses in
 extractlib are then candidates for genuinely dead branches.
@@ -58,22 +58,18 @@ def sweep(frames) -> None:
     def pages_pass(doc_fn, schema):
         return lambda it: X._map_documents(it, doc_fn, schema)
 
-    def chunk_pass(tpl):
-        # the chunk pass reads the extract pass's rows, as in run_job
-        schema = X.BOOK_CHUNKS_SCHEMA if tpl == "book" else X.CHUNKS_SCHEMA
-        cols = ["url", "parser", "extracted_text", *X.SECTION_COLUMNS]
-        return lambda it: X._map_documents(
-            (p[cols] for p in X._extract_batches(it)),
-            partial(X._chunk_document, tpl), schema)
+    def extract_pass(template):
+        # run_job's single pass: parse and chunk in one call
+        return lambda it: X._extract_batches(
+            p.assign(template=template) for p in it)
 
-    batch_fns = [("extract", X._extract_batches),
-                 ("office", pages_pass(X._office_rows, X.OFFICE_SCHEMA)),
-                 ("tables", pages_pass(partial(X._table_rows, False),
-                                       X.TABLES_SCHEMA)),
-                 ("tables_html", pages_pass(partial(X._table_rows, True),
-                                            X.TABLES_SCHEMA))]
-    for tpl in X.TEMPLATES:
-        batch_fns.append((f"chunk_{tpl}", chunk_pass(tpl)))
+    batch_fns = [(f"extract_{tpl}", extract_pass(tpl))
+                 for tpl in (None, *X.TEMPLATES)]
+    batch_fns += [("office", pages_pass(X._office_rows, X.OFFICE_SCHEMA)),
+                  ("tables", pages_pass(partial(X._table_rows, False),
+                                        X.TABLES_SCHEMA)),
+                  ("tables_html", pages_pass(partial(X._table_rows, True),
+                                             X.TABLES_SCHEMA))]
 
     sys.settrace(_global_trace)
     try:
