@@ -13,4 +13,10 @@ Layout:
   operators/   web-scale training-data ops (dedup, similarity, text stats).
 """
 
+from ragflow_spark.job import pyworker
+
 __version__ = "0.1.0"
+
+# every UDF the package ships unpickles from it, so each Python worker
+# stops re-reading unchanged zip archives at the start of every task
+pyworker.install()

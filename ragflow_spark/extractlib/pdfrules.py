@@ -38,6 +38,8 @@ GARBAGE_RES = [
     r"^http://[^ ]{12,}",
     r"^\(cid *: *[0-9]+ *\)$",
 ]
+# the reference gates as one search: a box is garbage iff any matches
+_GARBAGE = re.compile("|".join(f"(?:{p})" for p in GARBAGE_RES))
 
 
 def sort_y_firstly(arr: list[dict], threshold: float) -> list[dict]:
@@ -71,7 +73,7 @@ def tag_layouts(boxes: list[dict]) -> list[dict]:
     last_type = None
     for b in boxes:
         txt = b["text"].strip()
-        if any(re.search(p, txt) for p in GARBAGE_RES):
+        if _GARBAGE.search(txt):
             continue
         ltype = "title" if b.get("height", 10) >= 13 else "text"
         if ltype == "title" or last_type != ltype:
@@ -980,7 +982,7 @@ def tag_layouts_columns(boxes: list[dict],
     last_region: dict[tuple, tuple] = {}
     for b in boxes:
         txt = b["text"].strip()
-        if any(re.search(p, txt) for p in GARBAGE_RES):
+        if _GARBAGE.search(txt):
             continue
         ltype = "title" if b.get("height", 10) >= 13 else "text"
         key = (b["page_number"], int(b["x0"] // col_bucket))

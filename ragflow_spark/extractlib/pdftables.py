@@ -38,7 +38,7 @@ from .pdfrules import (
     text_merge,
     x_dis,
     y_dis,
-    GARBAGE_RES,
+    _GARBAGE,
 )
 from .tablerules import construct_table, is_caption
 
@@ -77,7 +77,7 @@ def tag_layouts_with_tables(boxes: list[dict]) -> list[dict]:
     last_type: str | None = None
     for b in boxes:
         txt = b["text"].strip()
-        if any(re.search(p, txt) for p in GARBAGE_RES):
+        if _GARBAGE.search(txt):
             continue
         if _TABLE_CAPTION_RE.match(txt):
             ltype = "table caption"

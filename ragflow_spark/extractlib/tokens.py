@@ -27,7 +27,9 @@ _TOKEN_RE = re.compile(
 
 
 def _piece_tokens(piece: str) -> int:
-    """The pinned per-piece cost — the ONE place the rule lives."""
+    """The pinned per-piece cost. ``num_tokens_from_string`` sums it in
+    closed form; change both together (``tests/test_tokens.py`` checks
+    that they agree)."""
     if piece[0].isascii() and piece[0].isalpha() and len(piece) > 4:
         return (len(piece) + 3) // 4
     return 1
@@ -37,8 +39,12 @@ def num_tokens_from_string(string: str) -> int:
     """Deterministic stand-in for tiktoken cl100k token count."""
     if not string:
         return 0
-    return sum(_piece_tokens(m.group(0))
-               for m in _TOKEN_RE.finditer(string))
+    # ``_piece_tokens`` summed without a call per piece: only ASCII
+    # letter runs can be longer than 4 characters, and for those
+    # (L + 3) // 4 == 1 + (L - 1) // 4
+    pieces = _TOKEN_RE.findall(string)
+    return len(pieces) + sum((len(p) - 1) >> 2
+                             for p in pieces if len(p) > 4)
 
 
 def token_head(string: str, n: int) -> str:

@@ -35,12 +35,16 @@ from __future__ import annotations
 import json
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import StructType
 
 from ragflow_spark.extractlib.xxh64 import xxh64_hexdigest
 
 PIPELINE_VERSION = "1"
+
+# read errors that mean "nothing committed yet"
+_NO_CHECKPOINT = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 LINEAGE_SCHEMA = ("run_id string, digest string, bucket int, n_docs long, "
                   "n_chunks long, n_bytes long, wall_ms long, wave int, "
@@ -74,8 +78,12 @@ def load_done_buckets(spark: SparkSession, ckpt_path: str,
     """
     try:
         lineage = spark.read.parquet(ckpt_path)
-    except Exception:  # first run: no checkpoint dir yet
-        return set()
+    except AnalysisException as e:
+        # first run: no checkpoint dir yet, or one with no files; any
+        # other error (an unreadable file) must not recompute every bucket
+        if e.getCondition() in _NO_CHECKPOINT:
+            return set()
+        raise
     rows = (
         lineage.where((F.col("digest") == digest) &
                       (F.col("status") == "ok"))

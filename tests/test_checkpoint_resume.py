@@ -297,3 +297,32 @@ def test_unknown_template_rejected_before_any_job(spark, pages_path,
         sc.setLocalProperty("spark.jobGroup.id", None)
     # no extracted/, chunks/ or lineage row
     assert not out.exists()
+
+
+def test_unreadable_checkpoint_raises_before_any_write(spark, pages_path,
+                                                       tmp_path):
+    """A corrupt lineage file is an error, not "nothing done yet": a
+    silent full recompute would append a second lineage row per bucket
+    on every later run."""
+    from ragflow_spark.job.run_extract import run_job
+
+    out = tmp_path / "out"
+    (out / "_checkpoint").mkdir(parents=True)
+    (out / "_checkpoint" / "part-00000.parquet").write_bytes(
+        b"not a parquet file")
+    with pytest.raises(Exception, match="is not a Parquet file"):
+        run_job(spark, pages_path, str(out), n_buckets=N_BUCKETS,
+                waves=WAVES)
+    assert not (out / "extracted").exists()
+
+
+def test_empty_checkpoint_dir_runs_every_bucket(spark, pages_path,
+                                                tmp_path):
+    from ragflow_spark.job.run_extract import run_job
+
+    out = tmp_path / "out"
+    (out / "_checkpoint").mkdir(parents=True)
+    summary = run_job(spark, pages_path, str(out), n_buckets=N_BUCKETS,
+                      waves=WAVES)
+    assert summary["buckets_done_prior"] == 0
+    assert summary["buckets_run"] == N_BUCKETS

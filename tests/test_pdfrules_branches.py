@@ -218,3 +218,24 @@ def test_columns_tagger_drops_garbage():
     boxes = [_box("1 / 12"), _box("real body text", top=120)]
     out = tag_layouts_columns(boxes)
     assert _t(out) == ["real body text"]
+
+
+@pytest.mark.parametrize("i, positive, negatives", [
+    (0, "••", ["• •", "•x", ""]),
+    (1, "3 / 12", ["3 /12x", "123 / 4", "3 - 12"]),
+    (2, "1 of 10", ["1 of 100", "x1 of 10", "one of 10"]),
+    (3, "http://example.org/x", ["http://short", "https://example.org/x",
+                                 " http://example.org/x"]),
+    (4, "(cid : 12 )", ["(cid:)", "(cid:12) x", "cid:12"]),
+])
+def test_compiled_garbage_gate_decides_like_the_pattern_list(
+        i, positive, negatives):
+    import re
+
+    from ragflow_spark.extractlib.pdfrules import GARBAGE_RES, _GARBAGE
+
+    assert re.search(GARBAGE_RES[i], positive)
+    for txt in [positive, *negatives]:
+        listed = any(re.search(p, txt) for p in GARBAGE_RES)
+        assert bool(_GARBAGE.search(txt)) == listed, txt
+    assert not any(re.search(p, t) for p in GARBAGE_RES for t in negatives)

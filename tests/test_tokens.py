@@ -27,3 +27,21 @@ def test_truncate():
     out = truncate(s, 6)
     assert num_tokens_from_string(out) <= 6
     assert s.startswith(out)
+
+
+def test_closed_form_equals_per_piece_sum():
+    import random
+
+    from ragflow_spark.extractlib.tokens import _TOKEN_RE, _piece_tokens
+
+    alphabet = (["a", "Z", "q", "x", " ", "\n", "\t", "'", "0", "7", ".",
+                 "-", "é", "ß", "Å", "文", "档", "　", "😀", "\U00020000"]
+                + ["'s", "'ll", "'ve", "'re", "'d", "'t", "'m"]
+                + ["customer", "extraordinarily", "12345678"])
+    rng = random.Random(20261019)
+    for _ in range(20000):
+        s = "".join(rng.choice(alphabet)
+                    for _ in range(rng.randrange(0, 40)))
+        expected = sum(_piece_tokens(m.group(0))
+                       for m in _TOKEN_RE.finditer(s))
+        assert num_tokens_from_string(s) == expected, s
