@@ -11,8 +11,8 @@ Byte-defining modules (the per-url extracted-text invariant lives here):
   htmlparse  — RAGFlowHtmlParser equivalent (deepdoc/parser/html_parser.py)
   tokens     — deterministic token counter (documented substitute for
                tiktoken cl100k_base, reference rag/utils/__init__.py:78-89)
-  xxh64      — pure-Python xxhash64 (chunk ids, task digests; reference
-               rag/svr/task_executor.py:266)
+  xxh64      — pure-Python xxhash64 and its lazily imported Spark twin
+               (chunk ids, task digests; rag/svr/task_executor.py:266)
   merge      — naive_merge / hierarchical_merge / bullets_category et al.
                (reference rag/nlp/__init__.py)
   templates  — naive / book / paper / one template chunkers (reference

@@ -80,18 +80,17 @@ def one(sections: list[str]) -> list[str]:
     return ["\n".join(sections)] if sections else []
 
 
+def kept_chunks(chunks: list[str]) -> list[tuple[int, str]]:
+    """(chunk_seq, chunk_text) of each non-blank chunk, tag-stripped as
+    tokenize_chunks does via remove_tag (rag/nlp/__init__.py:258-277)."""
+    return [(seq, remove_tag(raw)) for seq, raw in enumerate(chunks)
+            if raw.strip()]
+
+
 def chunks_with_ids(chunks: list[str], url: str) -> list[tuple[int, str, str]]:
-    """(chunk_seq, chunk_text, chunk_id) of each non-blank chunk:
-    chunk_text is tag-stripped as tokenize_chunks does via remove_tag
-    (rag/nlp/__init__.py:258-277), and the id hashes it once,
-    task_executor.py:266 with the url standing in for doc_id."""
-    out = []
-    for seq, raw in enumerate(chunks):
-        if not raw.strip():
-            continue
-        text = remove_tag(raw)
-        out.append((seq, text, chunk_id_of(text, url)))
-    return out
+    """kept_chunks plus chunk_id (task_executor.py:266, url as doc_id)."""
+    return [(seq, text, chunk_id_of(text, url))
+            for seq, text in kept_chunks(chunks)]
 
 
 def chunks_with_ids_docx(chunks: list[str], images: list,

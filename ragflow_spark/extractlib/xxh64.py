@@ -5,7 +5,7 @@ spec). The reference content-addresses chunks with
 over the sorted config (/root/reference/api/db/services/task_service.py:349-360).
 The sandbox has no xxhash wheel, so the 64-bit variant is implemented here
 from the published specification and verified against its official test
-vectors (tests/test_xxh64.py).
+vectors (tests/test_xxh64.py). Its JVM twin is ``xxh64_hex_col``.
 """
 
 from __future__ import annotations
@@ -96,3 +96,29 @@ def chunk_id(content: str, doc_key: str) -> str:
     ``xxhash.xxh64((chunk["content_with_weight"] + str(chunk["doc_id"]))
     .encode("utf-8")).hexdigest()``."""
     return xxh64_hexdigest((content + doc_key).encode("utf-8"))
+
+
+def xxh64_hex_col(data):
+    """``xxh64_hexdigest`` of a binary column:
+    ``lpad(lower(hex(XxHash64([data], seed=0))), 16, '0')``, because
+    ``F.xxhash64`` fixes its seed at 42. Built with the classic-session
+    (not Spark Connect) ``ExpressionUtils``; classes are named in full, as
+    each package segment of an ``sc._jvm`` lookup is a py4j round trip."""
+    from py4j.java_gateway import JavaClass
+    from pyspark import SparkContext
+    from pyspark.sql import Column, functions as F
+
+    client = SparkContext._active_spark_context._gateway._gateway_client
+    utils = JavaClass("org.apache.spark.sql.classic.ExpressionUtils", client)
+    seq = JavaClass("org.apache.spark.api.python.PythonUtils", client).toSeq
+    hashed = JavaClass("org.apache.spark.sql.catalyst.expressions.XxHash64",
+                       client)(seq([utils.expression(data._jc)]), 0)
+    return F.lpad(F.lower(F.hex(Column(utils.column(hashed)))), 16, "0")
+
+
+def chunk_id_col(content, doc_key):
+    """``chunk_id(content, str(doc_key))`` of two columns."""
+    from pyspark.sql import functions as F
+
+    return xxh64_hex_col(
+        F.concat(content, doc_key.cast("string")).cast("binary"))

@@ -73,8 +73,8 @@ def load_done_buckets(spark: SparkSession, ckpt_path: str,
 
     The checkpoint table is tiny (one row per bucket per run) — it is
     collected to the driver and becomes an IN-list filter, i.e. the
-    'anti-join' never shuffles the 100 TB side; Catalyst folds it into
-    the scan as a pushed predicate on the derived bucket column.
+    'anti-join' never shuffles the 100 TB side. It is a data filter
+    applied after the scan, which reads every row (ROADMAP direction 3).
     """
     try:
         lineage = spark.read.parquet(ckpt_path)

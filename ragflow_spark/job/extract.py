@@ -19,7 +19,7 @@ Physical plan shape (SURVEY.md §4.2):
            (url, html, template literal)          and chunk each document
       -> persist                               <- run_job: one frame per wave
            -> drop chunks              -> extracted/
-           -> select url, inline(chunks) -> chunks/   (no second pass)
+           -> select url, inline(chunks), chunk_id -> chunks/ (no second pass)
            -> groupBy bucket agg       -> lineage metrics (one collect)
 
 The extraction is embarrassingly parallel: no shuffle is required at all
@@ -36,13 +36,15 @@ from typing import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ragflow_spark.extractlib.xxh64 import chunk_id_col
+
 EXTRACTED_SCHEMA = ("url string, title string, extracted_text string, "
                     "n_sections int, parser string")
 
-# One chunk row of a document; ``merge_mode`` is dropped after the
-# inline unless the template is book. Struct fields are joined without
-# spaces so that the top-level schema still splits on ", ".
-CHUNK_FIELDS = ("chunk_seq:int,chunk_text:string,chunk_id:string,"
+# One chunk row of a document; after the inline, ``chunk_id`` is added
+# and ``merge_mode`` dropped unless the template is book. Struct fields
+# are joined without spaces so that the top-level schema still splits on ", ".
+CHUNK_FIELDS = ("chunk_seq:int,chunk_text:string,"
                 "span_start:long,span_end:long,page_nums:array<int>,"
                 "merge_mode:string")
 
@@ -236,7 +238,7 @@ def _chunk_rows(template: str, url: str, parser: str, text: str,
     """The chunk structs (``CHUNK_FIELDS`` order) of one document.
     chunk_seq is assigned here, per url, so no window function or
     global sort is needed (SURVEY.md §2.9)."""
-    from ragflow_spark.extractlib.templates import chunks_with_ids
+    from ragflow_spark.extractlib.templates import kept_chunks
     from ragflow_spark.extractlib.pdfrules import parse_positions
 
     raw, mode = _template_chunks(template, parser, text, sections)
@@ -246,11 +248,10 @@ def _chunk_rows(template: str, url: str, parser: str, text: str,
     # (rag/nlp/__init__.py:321-333 add_positions semantics)
     rows = []
     offset = 0
-    for seq, chunk, cid in chunks_with_ids(raw, url):
+    for seq, chunk in kept_chunks(raw):
         pages = sorted({p for pos in parse_positions(raw[seq])
                         for p in pos[0]})
-        rows.append((seq, chunk, cid, offset, offset + len(chunk), pages,
-                     mode))
+        rows.append((seq, chunk, offset, offset + len(chunk), pages, mode))
         offset += len(chunk)
     return rows
 
@@ -264,9 +265,12 @@ def check_template(template: str) -> None:
 
 def inline_chunks(docs: DataFrame, template: str, *keep: str) -> DataFrame:
     """extract_documents rows -> one row per chunk: url, the chunk fields
-    (merge_mode only under book) and the ``keep`` columns."""
+    plus chunk_id (merge_mode only under book) and the ``keep`` columns."""
     chunks = docs.select("url", F.inline("chunks"), *keep)
-    return chunks if template == "book" else chunks.drop("merge_mode")
+    cols = [c for c in chunks.columns
+            if c != "merge_mode" or template == "book"]
+    cid = chunk_id_col(F.col("chunk_text"), F.col("url")).alias("chunk_id")
+    return chunks.select(*cols[:3], cid, *cols[3:])
 
 
 def chunk_pages(pages: DataFrame, template: str = "naive") -> DataFrame:

@@ -121,10 +121,9 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
         return summary
 
     # input_format="iceberg" reads a catalog table name instead of a
-    # parquet dir — same scan contract (url/html column pruning and
-    # bucket pruning push down through either source); the sandbox has
-    # no Iceberg runtime, so tests exercise the parquet path and the
-    # cluster flips the flag
+    # parquet dir — same scan contract (url/html column pruning; the wave
+    # filter is a data filter after the scan, ROADMAP direction 3); the
+    # sandbox has no Iceberg runtime, so tests exercise the parquet path
     pages = spark.read.format(input_format).load(input_path)
     pages = pages.withColumn("bucket", ck.bucket_col("url", n_buckets))
 
@@ -149,8 +148,6 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
                 # rag/svr/task_executor.py:256-293) from the written
                 # chunk rows; embedding is a model seam the cluster job
                 # adds via indexing.embed_chunks(encode=<pandas UDF>).
-                # Clustered before the id pass, which keeps the
-                # partitioning, so the range sample never runs the id hash
                 from ragflow_spark.operators.indexing import index_rows
                 idx = index_rows(
                     _clustered(chunks.select(

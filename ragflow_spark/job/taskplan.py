@@ -24,10 +24,9 @@ Split rules (task_service.py:312-346, defaults as shipped):
 Digests (task_service.py:349-360): xxh64 over ``str(value)`` of the
 sorted chunking-config fields — with ``raptor``/``graphrag`` keys
 removed from ``parser_config`` first — then doc_id/from_page/to_page.
-The config prefix is per-job constant, so it is rendered once
-driver-side byte-for-byte (Python ``str(dict)`` included) and the
-per-row tail is hashed in an Arrow batch; no Python-object hashing in
-the hot path.
+The config prefix is per-job constant, so it is rendered once driver-side
+byte-for-byte (Python ``str(dict)`` included); each row hashes it with
+its tail in one column expression (``xxh64.xxh64_hex_col``), not Python.
 
 Reuse (task_service.py:410-433): a new task adopts a previous task's
 chunk ids when one exists with the same (from_page, digest) and that
@@ -42,12 +41,9 @@ exact.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ragflow_spark.extractlib.xxh64 import xxh64_hexdigest
+from ragflow_spark.extractlib.xxh64 import xxh64_hex_col
 
 WHOLE_DOC = 10 ** 9
 DEFAULT_RANGE_END = 10 ** 5
@@ -126,22 +122,10 @@ def config_prefix(chunking_config: dict) -> bytes:
 def add_task_digests(tasks: DataFrame,
                      chunking_config: dict) -> DataFrame:
     """tasks + the reference's per-task xxh64 hexdigest column."""
-    prefix = config_prefix(chunking_config)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["digest"] = [
-                xxh64_hexdigest(
-                    prefix + str(d).encode("utf-8")
-                    + str(f).encode("utf-8") + str(t).encode("utf-8"))
-                for d, f, t in zip(pdf["doc_id"], pdf["from_page"],
-                                   pdf["to_page"])]
-            yield pdf
-
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in tasks.schema.fields)
-    return tasks.mapInPandas(batches, schema=f"{fields}, digest string")
+    tail = [F.col(c).cast("string").cast("binary")
+            for c in ("doc_id", "from_page", "to_page")]
+    return tasks.withColumn("digest", xxh64_hex_col(
+        F.concat(F.lit(config_prefix(chunking_config)), *tail)))
 
 
 def reuse_prev_chunks(tasks: DataFrame,

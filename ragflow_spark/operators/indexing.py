@@ -30,15 +30,14 @@ map-side at any corpus size.
 
 ``index_rows`` grafts the build_chunks per-chunk field assembly
 (task_executor.py:256-293): chunk id ``xxh64(content + str(doc_id))``
-hexdigest (one Arrow batch — no JVM xxh64-of-concat matches the
-reference's byte stream), ``create_time``/``create_timestamp_flt`` from
-an injectable clock (the reference stamps ``datetime.now()``; wall
-clocks are parameters here, SURVEY §10.1), ``img_id`` =
-``"{kb_id}-{id}"`` for image-bearing chunks else ``""``, and the
-``pagerank_fea`` field added only when the task carries a pagerank
-(settings.PAGERANK_FLD).  Image bytes themselves go to blob storage in
-the reference (MinIO put) — that sink is out of scope; the field
-contract is what matters downstream.
+hexdigest (the column expression ``xxh64.chunk_id_col``, no Python
+pass), ``create_time``/``create_timestamp_flt`` from an injectable clock
+(the reference stamps ``datetime.now()``; wall clocks are parameters
+here, SURVEY §10.1), ``img_id`` = ``"{kb_id}-{id}"`` for image-bearing
+chunks else ``""``, and the ``pagerank_fea`` field added only when the
+task carries a pagerank (settings.PAGERANK_FLD).  Image bytes themselves
+go to blob storage in the reference (MinIO put) — that sink is out of
+scope; the field contract is what matters downstream.
 """
 
 from __future__ import annotations
@@ -49,7 +48,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ragflow_spark.extractlib.tokens import truncate
-from ragflow_spark.extractlib.xxh64 import xxh64_hexdigest
+from ragflow_spark.extractlib.xxh64 import chunk_id_col
 
 _TABLE_TAG_RE = r"</?(table|td|caption|tr|th)( [^<>]{0,12})?>"
 
@@ -115,19 +114,9 @@ def index_rows(chunks: DataFrame, kb_id: str,
     binary); all other columns pass through, as build_chunks'
     ``d.update(ck)`` does.
     """
-    def id_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["id"] = [
-                xxh64_hexdigest((c + str(d)).encode("utf-8"))
-                for c, d in zip(pdf["content_with_weight"],
-                                pdf["doc_id"])]
-            yield pdf
-
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in chunks.schema.fields)
-    with_id = chunks.mapInPandas(id_batches, schema=f"{fields}, id string")
-    out = (with_id
+    out = (chunks
+           .withColumn("id", chunk_id_col(F.col("content_with_weight"),
+                                          F.col("doc_id")))
            .withColumn("kb_id", F.lit(kb_id))
            .withColumn("create_time", F.lit(create_time))
            .withColumn("create_timestamp_flt",

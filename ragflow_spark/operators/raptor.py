@@ -48,9 +48,9 @@ nondeterministic; here new-layer positions are the cluster ids
 them (SURVEY §10.1 adaptation).
 
 ``raptor_rows`` is run_raptor's search-row assembly
-(task_executor.py:446-467): xxh64 chunk ids, the doc's
-``docnm_kwd``/``title_tks``, huqie ``content_ltks``/``content_sm_ltks``
-per summary, injectable clock — one Arrow batch, map-only.
+(task_executor.py:446-467): xxh64 chunk ids (a column expression), the
+doc's ``docnm_kwd``/``title_tks``, huqie ``content_ltks``/``content_sm_ltks``
+per summary (one Arrow batch), injectable clock — map-only.
 """
 
 from __future__ import annotations
@@ -62,7 +62,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ragflow_spark.extractlib.tokens import truncate
-from ragflow_spark.extractlib.xxh64 import xxh64_hexdigest
+from ragflow_spark.extractlib.xxh64 import chunk_id_col
 
 _CONTINUATION_RE = re.compile(
     "(······\n由于长度的原因，回答被截断了，要继续吗？"
@@ -188,7 +188,8 @@ def raptor_rows(tiers: DataFrame, docs: DataFrame,
                                                 tokenize)
 
     joined = tiers.join(
-        docs.select("doc_id", "name", "kb_id", "pagerank"), "doc_id")
+        docs.select("doc_id", "name", "kb_id", "pagerank"), "doc_id"
+    ).withColumn("id", chunk_id_col(F.col("content"), F.col("doc_id")))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -199,8 +200,7 @@ def raptor_rows(tiers: DataFrame, docs: DataFrame,
                 "kb_id": [[str(k)] for k in pdf["kb_id"]],
                 "docnm_kwd": pdf["name"],
                 "title_tks": [tokenize(n) for n in pdf["name"]],
-                "id": [xxh64_hexdigest((c + str(d)).encode("utf-8"))
-                       for c, d in zip(pdf["content"], pdf["doc_id"])],
+                "id": pdf["id"],
                 "content_with_weight": pdf["content"],
                 "content_ltks": [tokenize(c) for c in pdf["content"]],
                 "vec": pdf["vec"],

@@ -179,10 +179,12 @@ def test_lineage_rows_equal_committed_counts(spark, pages_path, tmp_path,
     _assert_lineage_matches_committed(spark, out_crash)
 
 
+@pytest.mark.parametrize("index", [False, True])
 def test_one_python_pass_per_wave(spark, pages_path, tmp_path,
-                                  monkeypatch):
+                                  monkeypatch, index):
     """Each wave parses and chunks its documents in one mapInPandas pass
-    and persists one frame, which feeds every table and the metrics."""
+    and persists one frame, which feeds every table and the metrics;
+    the chunk ids of chunks/ and index/ are column expressions."""
     from ragflow_spark.job.run_extract import run_job
 
     # the session's concrete DataFrame class overrides the base methods
@@ -195,7 +197,7 @@ def test_one_python_pass_per_wave(spark, pages_path, tmp_path,
             return _real(self, *args, **kwargs)
         monkeypatch.setattr(cls, name, counting)
     summary = run_job(spark, pages_path, str(tmp_path / "out"),
-                      n_buckets=N_BUCKETS, waves=2, index=False)
+                      n_buckets=N_BUCKETS, waves=2, index=index)
     assert summary["waves"] == 2
     assert calls == {"mapInPandas": 2, "persist": 2}
 
