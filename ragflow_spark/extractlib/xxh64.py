@@ -98,27 +98,38 @@ def chunk_id(content: str, doc_key: str) -> str:
     return xxh64_hexdigest((content + doc_key).encode("utf-8"))
 
 
+def jvm_class(name: str):
+    """The JVM class ``name``, named in full: each package segment of an
+    ``sc._jvm`` lookup is a py4j round trip. Calling pyspark's
+    ``functions`` through it also skips the dozen round trips of call-site
+    capture that each ``F.*`` call makes."""
+    from py4j.java_gateway import JavaClass
+    from pyspark import SparkContext
+
+    return JavaClass(
+        name, SparkContext._active_spark_context._gateway._gateway_client)
+
+
 def xxh64_hex_col(data):
     """``xxh64_hexdigest`` of a binary column:
     ``lpad(lower(hex(XxHash64([data], seed=0))), 16, '0')``, because
     ``F.xxhash64`` fixes its seed at 42. Built with the classic-session
-    (not Spark Connect) ``ExpressionUtils``; classes are named in full, as
-    each package segment of an ``sc._jvm`` lookup is a py4j round trip."""
-    from py4j.java_gateway import JavaClass
-    from pyspark import SparkContext
-    from pyspark.sql import Column, functions as F
+    (not Spark Connect) ``ExpressionUtils``."""
+    from pyspark.sql import Column
 
-    client = SparkContext._active_spark_context._gateway._gateway_client
-    utils = JavaClass("org.apache.spark.sql.classic.ExpressionUtils", client)
-    seq = JavaClass("org.apache.spark.api.python.PythonUtils", client).toSeq
-    hashed = JavaClass("org.apache.spark.sql.catalyst.expressions.XxHash64",
-                       client)(seq([utils.expression(data._jc)]), 0)
-    return F.lpad(F.lower(F.hex(Column(utils.column(hashed)))), 16, "0")
+    utils = jvm_class("org.apache.spark.sql.classic.ExpressionUtils")
+    seq = jvm_class("org.apache.spark.api.python.PythonUtils").toSeq
+    fns = jvm_class("org.apache.spark.sql.functions")
+    hashed = jvm_class("org.apache.spark.sql.catalyst.expressions.XxHash64")(
+        seq([utils.expression(data._jc)]), 0)
+    return Column(fns.lpad(fns.lower(fns.hex(utils.column(hashed))), 16, "0"))
 
 
 def chunk_id_col(content, doc_key):
     """``chunk_id(content, str(doc_key))`` of two columns."""
-    from pyspark.sql import functions as F
+    from pyspark.sql import Column
 
-    return xxh64_hex_col(
-        F.concat(content, doc_key.cast("string")).cast("binary"))
+    seq = jvm_class("org.apache.spark.api.python.PythonUtils").toSeq
+    data = jvm_class("org.apache.spark.sql.functions").concat(
+        seq([content._jc, doc_key._jc.cast("string")]))
+    return xxh64_hex_col(Column(data.cast("binary")))

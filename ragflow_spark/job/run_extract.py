@@ -18,13 +18,21 @@ Execution shape per wave (SURVEY.md §4.2):
     Scan(pages) --filter bucket IN wave--> [salted Repartition]
       -> MapInPandas(extract) -> persist    (the one Python pass: one
                                              parse, chunks as an array)
+         concurrently, one driver thread each:
+           -> one per-bucket agg and collect (the rows written beside it)
            -> drop chunks      -> range-cluster on (bucket, url)
                                -> write extracted/ (partitioned by bucket,
                                   dynamic partition overwrite = idempotent)
            -> inline(chunks)   -> range-cluster on (bucket, url)
                                -> write chunks/   (same)
-           -> one per-bucket agg and collect (the rows just written)
-      -> unpersist -> append lineage rows (commit point)
+           -> [index rows      -> write index/    (same; index=True)]
+      -> every step ended -> unpersist
+      -> every step succeeded -> append lineage rows (commit point)
+
+The outputs read the same persisted frame and do not depend on each
+other, so they run as concurrent Spark jobs: one step's driver-side
+planning and commit overlap another's tasks. Lineage still comes last,
+so a wave whose outputs are not all written never counts as done.
 
 The range-cluster step gives each write task a contiguous run of
 (bucket, key) rows, so a table gets at most |wave| + parallelism - 1
@@ -43,10 +51,12 @@ from __future__ import annotations
 import argparse
 import json
 import time
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
-from typing import Iterator
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from ragflow_spark.job import checkpoint as ck, extract as ex
 from ragflow_spark.job.salting import salted_repartition
@@ -83,6 +93,37 @@ def _persisted(df: DataFrame) -> Iterator[DataFrame]:
         yield df
     finally:
         df.unpersist()
+
+
+def _index_frame(chunks: DataFrame, kb_id: str, create_time: str,
+                 create_timestamp: float) -> DataFrame:
+    """Search-store rows (build_chunks field assembly,
+    rag/svr/task_executor.py:256-293) of ``inline_chunks`` rows,
+    range-clustered on (bucket, doc_id); embedding is a model seam the
+    cluster job adds via indexing.embed_chunks(encode=<pandas UDF>)."""
+    from ragflow_spark.operators.indexing import index_rows
+
+    return index_rows(
+        _clustered(chunks.select(
+            F.col("url").alias("doc_id"),
+            F.col("chunk_text").alias("content_with_weight"),
+            F.lit(None).cast("binary").alias("image"),
+            "chunk_seq", "bucket"), "doc_id"),
+        kb_id, create_time=create_time, create_timestamp=create_timestamp)
+
+
+def _run_concurrently(spark: SparkSession, steps: list[Callable]) -> list:
+    """Run each step on its own driver thread; returns their results in
+    order once every step has ended, or re-raises the first error.
+
+    Each step is wrapped on its own, so its thread starts with a copy of
+    the caller's local properties (job group, tracing): one wrapper for
+    several steps would share one ``Properties`` object, into which Spark
+    writes each query's ``spark.sql.execution.id``."""
+    with ThreadPoolExecutor(max_workers=len(steps)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(step))
+                   for step in steps]
+    return [f.result() for f in futures]
 
 
 def run_job(spark: SparkSession, input_path: str, output_dir: str,
@@ -125,11 +166,13 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
     # filter is a data filter after the scan, ROADMAP direction 3); the
     # sandbox has no Iceberg runtime, so tests exercise the parquet path
     pages = spark.read.format(input_format).load(input_path)
-    pages = pages.withColumn("bucket", ck.bucket_col("url", n_buckets))
+    bucket = ck.bucket_sql("url", n_buckets)
 
     for wave_idx, wave in enumerate(_wave_groups(todo, waves)):
         t0 = time.perf_counter()
-        sub = pages.where(F.col("bucket").isin(wave))
+        # one SQL string is one py4j call; isin() makes several per
+        # bucket, for the same INSET filter
+        sub = pages.where(F.expr(f"{bucket} IN ({', '.join(map(str, wave))})"))
         if repartition:
             sub = salted_repartition(sub, num_partitions=repartition,
                                      salt_buckets=salt_buckets)
@@ -137,39 +180,40 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
         # re-derived from url (cheaper than threading a passthrough
         # column through the Arrow UDF)
         docs = (ex.extract_documents(sub, template)
-                .withColumn("bucket", ck.bucket_col("url", n_buckets)))
+                .withColumn("bucket", F.expr(bucket)))
         with _persisted(docs) as docs:
-            chunks = ex.inline_chunks(docs, template, "bucket")
-            _write_partitioned(_clustered(docs.drop("chunks"), "url"),
-                               extracted_path)
-            _write_partitioned(_clustered(chunks, "url"), chunks_path)
-            if index:
-                # search-store rows (build_chunks field assembly,
-                # rag/svr/task_executor.py:256-293) from the written
-                # chunk rows; embedding is a model seam the cluster job
-                # adds via indexing.embed_chunks(encode=<pandas UDF>).
-                from ragflow_spark.operators.indexing import index_rows
-                idx = index_rows(
-                    _clustered(chunks.select(
-                        F.col("url").alias("doc_id"),
-                        F.col("chunk_text").alias("content_with_weight"),
-                        F.lit(None).cast("binary").alias("image"),
-                        "chunk_seq", "bucket"), "doc_id"),
-                    kb_id,
-                    create_time=index_create_time,
-                    create_timestamp=index_clock)
-                _write_partitioned(idx, f"{output_dir}/index")
-            wall_ms = int((time.perf_counter() - t0) * 1000)
+            # each step plans its own frame on its own thread, so the
+            # first job starts while the others are still being planned
+            def metrics():
+                # one Spark aggregate over the persisted rows the writes
+                # consume, so exact under stage retries (unlike
+                # accumulators)
+                return docs.groupBy("bucket").agg(
+                    F.count("*").alias("n_docs"),
+                    F.sum(F.size("chunks")).alias("n_chunks"),
+                    F.sum(F.octet_length("extracted_text"))
+                    .alias("n_bytes")).collect()
 
-            # metrics: one Spark aggregate over the persisted rows the
-            # writes consumed, so exact under stage retries (unlike
-            # accumulators)
-            met = {r["bucket"]: r for r in
-                   docs.groupBy("bucket").agg(
-                       F.count("*").alias("n_docs"),
-                       F.sum(F.size("chunks")).alias("n_chunks"),
-                       F.sum(F.octet_length("extracted_text"))
-                       .alias("n_bytes")).collect()}
+            def write_extracted():
+                _write_partitioned(_clustered(docs.drop("chunks"), "url"),
+                                   extracted_path)
+
+            def write_chunks():
+                _write_partitioned(_clustered(
+                    ex.inline_chunks(docs, template, "bucket"), "url"),
+                    chunks_path)
+
+            def write_index():
+                _write_partitioned(_index_frame(
+                    ex.inline_chunks(docs, template, "bucket"), kb_id,
+                    index_create_time, index_clock), f"{output_dir}/index")
+
+            steps = [metrics, write_extracted, write_chunks]
+            if index:
+                steps.append(write_index)
+            met = {r["bucket"]: r
+                   for r in _run_concurrently(spark, steps)[0]}
+            wall_ms = int((time.perf_counter() - t0) * 1000)
         rows = []
         for b in wave:
             m = met.get(b)

@@ -232,6 +232,55 @@ def test_failed_wave_leaks_no_cached_blocks(spark, pages_path, tmp_path):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_failed_concurrent_write_commits_nothing(spark, pages_path,
+                                                 tmp_path):
+    """The extracted/ write fails while chunks/ and the metrics run
+    beside it: the wave raises after every step has ended, commits no
+    lineage row and leaks no cached blocks, and a resumed run writes the
+    tables of a clean run."""
+    from test_template_digests import _digest
+
+    from ragflow_spark.job.run_extract import run_job
+
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "extracted").write_text("not a directory")
+    spark.catalog.clearCache()
+    with pytest.raises(Exception):
+        run_job(spark, pages_path, str(out), n_buckets=N_BUCKETS,
+                waves=WAVES)
+    assert not glob.glob(f"{out}/_checkpoint/*.parquet")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    (out / "extracted").unlink()
+    run_job(spark, pages_path, str(out), n_buckets=N_BUCKETS, waves=WAVES)
+    clean = str(tmp_path / "clean")
+    run_job(spark, pages_path, clean, n_buckets=N_BUCKETS, waves=WAVES)
+    per_run = ("run_id", "wall_ms", "ts")
+    for table, drop in (("extracted", ()), ("chunks", ()),
+                        ("_checkpoint", per_run)):
+        assert _digest(spark, f"{out}/{table}", drop) == \
+            _digest(spark, f"{clean}/{table}", drop), table
+
+
+def test_wave_jobs_carry_caller_job_group(spark, pages_path, tmp_path):
+    """The jobs a wave starts on its own driver threads carry the
+    caller's local properties (job group, tracing) like the rest."""
+    from ragflow_spark.job.run_extract import run_job
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("wave-jobs", "every job of run_job")
+    try:
+        run_job(spark, pages_path, str(tmp_path / "out"),
+                n_buckets=N_BUCKETS, waves=2, index=True)
+        assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+        assert tracker.getJobIdsForGroup("wave-jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_index_stage_rows(spark, pages_path, tmp_path):
     """--index writes search-store rows whose ids are the reference
     xxh64(content + doc_id) over the committed chunk files."""

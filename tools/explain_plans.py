@@ -4,6 +4,13 @@ The audit trail for the scale posture: shows column pruning
 (ReadSchema), predicate pushdown (PushedFilters), exchange counts, and
 broadcast placement for each family of operator. Run after plan-shape
 changes; the committed PLANS.md is the reviewable artifact.
+
+    python tools/explain_plans.py                         # every query
+    python tools/explain_plans.py index_rows task_reuse   # only these
+
+Named queries get their summary row and plan section rewritten in the
+existing PLANS.md; every other byte of it stays as it is (a full run
+renumbers every plan's expression ids).
 """
 
 from __future__ import annotations
@@ -48,33 +55,46 @@ QUERIES = ["extract_html", "chunks_naive", "extract_pdf",
 SF = "/root/testdata/sf0.01"
 
 
-def main() -> None:
-    import __spark_entry__ as entry
-    from ragflow_spark.job.session import get_spark
+def _plan(qs, spark, name: str) -> tuple[str, str]:
+    """The summary-table row and the plan section of one query."""
+    df = qs[name](spark, SF)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    n_ex = len(re.findall(r"\bExchange\b", plan))
+    n_bc = len(re.findall(r"BroadcastExchange", plan))
+    scans = re.findall(r"ReadSchema: ([^\n]*)", plan)
+    row = (f"| {name} | {n_ex} | {n_bc} | {len(scans)} | "
+           f"`{scans[0][:80] if scans else '-'}` |")
+    head = "\n".join(plan.splitlines()[:40])
+    return row, f"## {name}\n\n```\n{head}\n```\n"
 
-    spark = get_spark(master="local[4]", shuffle_partitions=4)
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entry.queries()
 
+def _splice(text: str, name: str, row: str, section: str) -> str:
+    """``text`` with the summary row and the section of ``name``
+    replaced."""
+    lines = text.split("\n")
+    (i,) = [k for k, line in enumerate(lines)
+            if line.startswith(f"| {name} |")]
+    lines[i] = row
+    text = "\n".join(lines)
+    start = text.index(f"## {name}\n")
+    end = text.find("\n## ", start)
+    return text[:start] + section + text[end if end >= 0 else len(text):]
+
+
+def _all_plans(qs, spark) -> str:
+    """The whole PLANS.md."""
     out = ["# PLANS — physical plan audit (generated by "
            "tools/explain_plans.py)\n"]
     summary = ["| query | exchanges | broadcasts | scans | "
                "ReadSchema (first scan) |", "|---|---|---|---|---|"]
     details = []
     for name in QUERIES:
-        df = qs[name](spark, SF)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        n_ex = len(re.findall(r"\bExchange\b", plan))
-        n_bc = len(re.findall(r"BroadcastExchange", plan))
-        scans = re.findall(r"ReadSchema: ([^\n]*)", plan)
-        summary.append(
-            f"| {name} | {n_ex} | {n_bc} | {len(scans)} | "
-            f"`{scans[0][:80] if scans else '-'}` |")
-        head = "\n".join(plan.splitlines()[:40])
-        details.append(f"## {name}\n\n```\n{head}\n```\n")
+        row, section = _plan(qs, spark, name)
+        summary.append(row)
+        details.append(section)
     out.append("\n".join(summary) + "\n")
     out.append(
         "\nNotes: extraction queries are map-only (exchanges come from "
@@ -116,11 +136,33 @@ def main() -> None:
         "the (name,type) counts, broadcast back into the merge — the "
         "full-text response column never crosses an exchange.\n")
     out.extend(details)
+    return "\n".join(out)
+
+
+
+def main(names: list[str]) -> None:
+    import __spark_entry__ as entry
+    from ragflow_spark.job.session import get_spark
+
+    unknown = set(names) - set(QUERIES)
+    if unknown:
+        sys.exit(f"unknown queries: {sorted(unknown)}")
+    spark = get_spark(master="local[4]", shuffle_partitions=4)
+    spark.sparkContext.setLogLevel("ERROR")
+    qs = entry.queries()
+
+    if names:
+        with open("PLANS.md") as f:
+            text = f.read()
+        for name in names:
+            text = _splice(text, name, *_plan(qs, spark, name))
+    else:
+        text = _all_plans(qs, spark)
     with open("PLANS.md", "w") as f:
-        f.write("\n".join(out))
+        f.write(text)
     print("wrote PLANS.md")
     spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
